@@ -12,6 +12,8 @@ PySpark DataFrame plans that Catalyst/AQE can optimize.
 Layout
 ------
 - ``session``    : SparkSession factory tuned for local[N] testing.
+- ``worker``     : Python-worker daemon the sessions start workers
+                   through (stat-guarded zip-import invalidation).
 - ``tables``     : parquet table loaders for the driver's testdata.
 - ``sources``    : extra input connectors (KEEL — the reference's
                    native dataset format).

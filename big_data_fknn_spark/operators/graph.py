@@ -152,9 +152,12 @@ def connected_components(
     # label table are gone from EVERY connected_components call (a
     # 2-round run does 2 jobs instead of 3); at 100 TB that is a full
     # O(|V|) scan saved per call.  Convergence semantics unchanged:
-    # prev_sum is the identical decimal fingerprint, the NULL guard
-    # still raises (now after the fused job, same error), and an
-    # empty edge set still converges on the None == None compare.
+    # prev_sum is the identical decimal fingerprint and the NULL guard
+    # still raises (now after the fused job, same error).  An empty
+    # edge set never materializes the observation (the empty plan is
+    # pruned), so it is read only when round 1 labeled some node; an
+    # empty round-1 table implies an empty init table, whose sum is
+    # the None that converges on the None == None compare.
     from pyspark.sql import Observation
 
     prev_sum = None
@@ -193,7 +196,7 @@ def connected_components(
         labels = labels.localCheckpoint(eager=False)
         rounds += 1
         s = _label_sum(labels)
-        if init_obs is not None:
+        if init_obs is not None and s is not None:
             prev_sum = _check_fingerprint(init_obs.get)
         if s == prev_sum:
             converged = True

@@ -12,6 +12,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# directory holding the package: Python workers must import
+# big_data_fknn_spark.worker whatever the driver's cwd
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_mem() -> str:
+    """24g, or half the host's RAM when that is less.  G1 grows the
+    heap towards -Xmx before collecting hard: a 24g heap on a 16 GB
+    host got the JVM OOM-killed midway through the test suite."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, ram // 2 >> 20)}m"
+
 
 def get_spark(app_name: str = "big_data_fknn_spark", cpus: int | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession.
@@ -50,10 +62,24 @@ def get_spark(app_name: str = "big_data_fknn_spark", cpus: int | None = None) ->
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from big_data_fknn_spark.worker, which
+        # wraps pyspark's daemon: on CPython < 3.13 pyspark's per-task
+        # importlib.invalidate_caches() re-reads pyspark.zip's
+        # 1,328-entry central directory once per cached zipimporter:
+        # 0.17 s of CPU per call with 14 importers on a 4-core x86
+        # host.  The module re-reads only an archive whose stat
+        # changed; an FkNN job's process-tree CPU fell 22%.
+        .config("spark.python.daemon.module", "big_data_fknn_spark.worker")
         # local mode: the driver JVM IS the executor — give it real
-        # memory (the box has 128 GiB; shuffles spill if exceeded)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # memory (shuffles spill if exceeded)
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     spark = builder.getOrCreate()
+    # sc.environment is spark.executorEnv.* as every Python function
+    # ships it to its workers: append, keeping a path set elsewhere
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PKG_PARENT])
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -128,3 +128,26 @@ def test_non_integral_and_null_node_ids_rejected(spark):
     nl = spark.createDataFrame([(1, 2), (3, None)], "src: bigint, dst: bigint")
     with pytest.raises(ValueError, match="non-null"):
         graph.connected_components(nl)
+
+
+def test_empty_edge_set_returns_no_labels(spark):
+    """An empty edge set never materializes round 1's init-fingerprint
+    observation; the operator must converge on the empty labeling
+    instead of reading it."""
+    assert _cc(spark, []) == {}
+
+
+def test_j8f_with_no_pair_over_tau_is_empty(spark, monkeypatch):
+    """j8f under a threshold no pair passes (Jaccard <= 1 < tau): the
+    empty intermediate edge set reaches connected_components."""
+    from big_data_fknn_spark.cache import release_query_caches
+    from big_data_fknn_spark.queries import llm
+    from tests.test_llm import SF_DIR
+
+    monkeypatch.setattr(llm, "_TAU", 1.01)
+    try:
+        df = llm.j8f_dedup_clusters(spark, SF_DIR)
+        assert df.columns == ["doc_id", "cluster_id", "csize"]
+        assert df.collect() == []
+    finally:
+        release_query_caches()

@@ -79,12 +79,16 @@ def main() -> None:
     from big_data_fknn_spark.queries import load_all
     from big_data_fknn_spark.session import get_spark
 
+    usage = "usage: plan_capture.py before|after [--round NAME] [--headline] [KEY ...]"
+    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
+        raise SystemExit(usage)
     phase = sys.argv[1]
-    assert phase in ("before", "after"), "phase must be before|after"
     keys = sys.argv[2:]
     rnd = "r13"
     if "--round" in keys:
         i = keys.index("--round")
+        if i + 1 >= len(keys) or keys[i + 1].startswith("--"):
+            raise SystemExit(f"--round needs a value\n{usage}")
         rnd = keys[i + 1]
         keys = keys[:i] + keys[i + 2 :]
     if "--headline" in keys:

@@ -99,8 +99,16 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         text=True,
         timeout=1800,
     )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        sys.stderr.write(out.stderr)
+        raise SystemExit(f"bench.py at {cpus} cores exited {out.returncode} without a JSON line")
+    return json.loads(lines[-1])
+
+
+def _ratio(num: float, den: float) -> float | None:
+    """num/den to 2 places; None when den is 0 (a key timed at 0 s)."""
+    return round(num / den, 2) if den else None
 
 
 def main() -> None:
@@ -115,10 +123,7 @@ def main() -> None:
         if saved is not None:
             with open(detail, "w") as f:
                 f.write(saved)
-    ratios = {
-        k: round(r8["queries"][k] / r32["queries"][k], 2)
-        for k in r32["queries"]
-    }
+    ratios = {k: _ratio(r8["queries"][k], r32["queries"][k]) for k in r32["queries"]}
     art = {
         "note": (
             "bench.py unmodified, 8 vs 32 cores, on a VALUE-IDENTICAL "
@@ -130,7 +135,7 @@ def main() -> None:
         "target_row_groups": TARGET_GROUPS,
         "total_32": r32["value"],
         "total_8": r8["value"],
-        "total_ratio_8_over_32": round(r8["value"] / r32["value"], 2),
+        "total_ratio_8_over_32": _ratio(r8["value"], r32["value"]),
         "per_query_32": r32["queries"],
         "per_query_8": r8["queries"],
         "ratio_8_over_32": ratios,
