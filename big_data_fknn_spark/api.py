@@ -40,6 +40,21 @@ def _norm(df: DataFrame, id_col: str, feat_col: str, label_col: str) -> DataFram
     )
 
 
+def confusion(pred: DataFrame) -> DataFrame:
+    """(label, pred, n) counts of a ``(label, pred)`` prediction frame."""
+    return pred.groupBy("label", "pred").agg(F.count(F.lit(1)).alias("n"))
+
+
+def confusion_summary(rows) -> tuple[int, float | None]:
+    """``(n_test, accuracy)`` from collected confusion rows: n_test
+    counts every row, accuracy averages label = pred over the rows
+    where both are non-NULL (SQL AVG; None when there are none)."""
+    scored = [r for r in rows if r["label"] is not None and r["pred"] is not None]
+    n_scored = sum(r["n"] for r in scored)
+    hits = sum(r["n"] for r in scored if r["label"] == r["pred"])
+    return sum(r["n"] for r in rows), hits / n_scored if n_scored else None
+
+
 @dataclass
 class KNNISClassifier:
     """Crisp kNN with majority vote — the reference's runkNN_IS EP."""
@@ -67,9 +82,8 @@ class KNNISClassifier:
             metric=_METRIC[distance_type],
         )
 
-    def predict(self) -> DataFrame:
-        """(vec_id, label, pred) — deterministic vote: max neighbor
-        count, ties to the smallest class id (SURVEY.md §7.3)."""
+    def _votes(self) -> DataFrame:
+        """(vec_id, label, cls, cnt): neighbor-class counts per test point."""
         knn = knn_join_blas(
             self.test,
             self.train,
@@ -78,16 +92,21 @@ class KNNISClassifier:
             keep_q_cols=("label",),
             keep_c_cols=("label",),
         )
-        votes = knn.groupBy(
+        return knn.groupBy(
             F.col("q_id").alias("vec_id"),
             F.col("q_label").alias("label"),
             F.col("n_label").alias("cls"),
         ).agg(F.count(F.lit(1)).alias("cnt"))
+
+    def predict(self) -> DataFrame:
+        """(vec_id, label, pred) — deterministic vote: max neighbor
+        count, ties to the smallest class id (SURVEY.md §7.3)."""
         pick = Window.partitionBy("vec_id").orderBy(
             F.col("cnt").desc(), F.col("cls").asc()
         )
         return (
-            votes.withColumn("r", F.row_number().over(pick))
+            self._votes()
+            .withColumn("r", F.row_number().over(pick))
             .where(F.col("r") == 1)
             .select("vec_id", "label", F.col("cls").alias("pred"))
         )
@@ -95,17 +114,10 @@ class KNNISClassifier:
     def confusion_matrix(self) -> DataFrame:
         """(label, pred, n) — the reference driver's numClass² matrix,
         kept distributed ([R runFuzzyKNN.scala] collects it)."""
-        return (
-            self.predict()
-            .groupBy("label", "pred")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
+        return confusion(self.predict())
 
-    def accuracy(self) -> float:
-        row = self.predict().agg(
-            F.avg((F.col("label") == F.col("pred")).cast("double")).alias("acc")
-        ).first()
-        return float(row["acc"])
+    def accuracy(self) -> float | None:
+        return confusion_summary(self.confusion_matrix().collect())[1]
 
     def auc(self) -> DataFrame:
         """(cls, auc) one-vs-rest tie-aware AUC over the vote scores,
@@ -117,19 +129,7 @@ class KNNISClassifier:
             ovr_auc,
         )
 
-        knn = knn_join_blas(
-            self.test,
-            self.train,
-            k=self.k,
-            metric=self.metric,
-            keep_q_cols=("label",),
-            keep_c_cols=("label",),
-        )
-        votes = knn.groupBy(
-            F.col("q_id").alias("q"),
-            F.col("q_label").alias("label"),
-            F.col("n_label").alias("cls"),
-        ).agg(F.count(F.lit(1)).alias("cnt"))
+        votes = self._votes().withColumnRenamed("vec_id", "q")
         classes = self.train.select(F.col("label").alias("cls")).distinct()
         return ovr_auc(dense_vote_scores(votes, classes))
 

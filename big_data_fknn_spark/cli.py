@@ -31,7 +31,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_fknn_spark.api import FuzzyKNNClassifier, KNNISClassifier
+from big_data_fknn_spark.api import (
+    FuzzyKNNClassifier,
+    KNNISClassifier,
+    confusion,
+    confusion_summary,
+)
 from big_data_fknn_spark.session import get_spark
 from big_data_fknn_spark.sources import read_keel
 
@@ -75,34 +80,24 @@ def main(argv: list[str] | None = None) -> None:
     t_load = time.perf_counter() - t0
 
     t1 = time.perf_counter()
-    if args.algo == "knn":
-        clf = KNNISClassifier.setup(
-            train, test, k=args.k, distance_type=args.distance
-        )
-        pred = clf.predict()
-    else:
-        clf = FuzzyKNNClassifier.setup(
-            train, test, k=args.k, distance_type=args.distance
-        )
-        pred = clf.predict()
+    clf = KNNISClassifier if args.algo == "knn" else FuzzyKNNClassifier
+    pred = clf.setup(train, test, k=args.k, distance_type=args.distance).predict()
     pred.write.mode("overwrite").parquet(f"{args.out}/predictions")
     t_predict = time.perf_counter() - t1
 
-    confusion = (
-        pred.groupBy("label", "pred").agg(F.count(F.lit(1)).alias("n"))
+    # pred (every kernel pass) ran once, in that write: the rest reads files
+    written = spark.read.parquet(f"{args.out}/predictions")
+    confusion(written).write.mode("overwrite").parquet(f"{args.out}/confusion")
+    n_test, accuracy = confusion_summary(
+        spark.read.parquet(f"{args.out}/confusion").collect()  # ≤ classes² rows
     )
-    confusion.write.mode("overwrite").parquet(f"{args.out}/confusion")
-    acc_row = pred.agg(
-        F.avg((F.col("label") == F.col("pred")).cast("double")).alias("acc"),
-        F.count(F.lit(1)).alias("n_test"),
-    ).first()
 
     metrics = {
         "algo": args.algo,
         "k": args.k,
         "distance_type": args.distance,
-        "n_test": int(acc_row["n_test"]),
-        "accuracy": float(acc_row["acc"]),
+        "n_test": n_test,
+        "accuracy": accuracy,
         "seconds_load": round(t_load, 3),
         "seconds_predict": round(t_predict, 3),
     }

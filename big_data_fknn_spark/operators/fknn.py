@@ -17,9 +17,13 @@ votes its membership vector weighted by w = 1/d^(2/(m-1)) (m=2 ⇒
 1/d²); normalized class scores u_q(j) = Σ w·u_n(j) / Σ w;
 prediction = argmax_j (ties → smallest class id).
 
-Both stages are pure DataFrame compositions (crossJoin+window top-k,
-groupBy aggregates, CASE) — no UDFs, fully codegen'd, and the exact
-same neighbor sets as the sequential algorithm (the papers'
+Each stage is one pass of the Arrow BLAS kNN kernel
+(operators/knn.py ``knn_join_blas``, a ``mapInPandas`` over the
+candidates with the labels riding the kernel) and one shuffle: the
+top-k window's ``q_id`` exchange, which the stage's aggregates reuse
+(stage 2's membership join keeps it when the planner broadcasts the
+membership table).
+The neighbor sets are exactly the sequential algorithm's (the papers'
 "exactness" property carries over because the top-k is global).
 
 Memberships are kept in sparse long format ``(vec_id, cls, u)`` —
@@ -41,7 +45,8 @@ EPS = 1e-12  # guards w = 1/d² against duplicate points (d = 0)
 def keller_memberships(train: DataFrame, k: int = 5) -> DataFrame:
     """Stage 1: sparse membership table ``(vec_id, cls, u)``.
 
-    ``train`` needs columns (vec_id, emb: array<double>, label).
+    ``train`` needs columns (vec_id, emb: array<double>, label).  A
+    point with no neighbor at all (one-row train set) gets no row.
     """
     knn = knn_join_blas(
         train,
@@ -51,29 +56,57 @@ def keller_memberships(train: DataFrame, k: int = 5) -> DataFrame:
         keep_q_cols=("label",),
         keep_c_cols=("label",),
     )
-    # neighbor-class counts per train point (partial+final hash agg)
-    counts = knn.groupBy(
-        F.col("q_id").alias("vec_id"),
-        F.col("q_label").alias("own"),
-        F.col("n_label").alias("cls"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    # ensure the own-class row exists even with zero same-class
-    # neighbors (its membership is still 0.51): union a zero row per
-    # train point, then re-aggregate.
-    own_rows = train.select(
-        "vec_id",
-        F.col("label").alias("own"),
-        F.col("label").alias("cls"),
-        F.lit(0).cast("long").alias("cnt"),
+    # One aggregation, on the top-k window's q_id partitioning: every
+    # neighbor row counts its class, and each point's rank-1 row also
+    # emits a zero for the point's own class, so the own-class row
+    # exists even with no same-class neighbor (u = 0.51).
+    labels = F.when(F.col("rn") == 1, F.array("n_label", "q_label")).otherwise(
+        F.array("n_label")
     )
-    merged = counts.unionByName(own_rows).groupBy("vec_id", "own", "cls").agg(
-        F.sum("cnt").alias("cnt")
+    counts = (
+        knn.select(
+            F.col("q_id").alias("vec_id"),
+            F.col("q_label").alias("own"),
+            F.posexplode(labels).alias("pos", "cls"),
+        )
+        .groupBy("vec_id", "own", "cls")
+        .agg(F.count(F.when(F.col("pos") == 0, 1)).alias("cnt"))
     )
     u = F.when(
         F.col("cls") == F.col("own"),
         0.51 + 0.49 * F.col("cnt") / F.lit(float(k)),
     ).otherwise(0.49 * F.col("cnt") / F.lit(float(k)))
-    return merged.select("vec_id", "cls", u.alias("u"))
+    return counts.select("vec_id", "cls", u.alias("u"))
+
+
+def fuzzy_scores(
+    test: DataFrame,
+    train: DataFrame,
+    memberships: DataFrame,
+    k: int = 5,
+) -> DataFrame:
+    """Stage-2 class scores ``(q_id, q_label, cls, u_norm, rnk)``: the
+    normalized fuzzy membership of each evidenced class per test point,
+    ``rnk`` ranking a point's classes by (u_norm desc, cls)."""
+    knn = knn_join_blas(test, train, k=k, keep_q_cols=("label",))
+    knn = knn.withColumn(
+        "w", F.lit(1.0) / F.greatest(F.col("dist") * F.col("dist"), F.lit(EPS))
+    )
+    # total weight per query: a window sum over the q_id partitioning
+    # the top-k window established (no exchange, unlike a groupBy joined
+    # back), adding the k weights in (dist, n_id) order
+    wq = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
+    knn = knn.withColumn(
+        "tw", F.sum("w").over(wq.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    )
+    scores = (
+        knn.join(memberships, knn.n_id == memberships.vec_id)
+        .groupBy("q_id", "q_label", "cls", "tw")
+        .agg(F.sum(F.col("w") * F.col("u")).alias("s"))
+        .withColumn("u_norm", F.col("s") / F.col("tw"))
+    )
+    pick = Window.partitionBy("q_id").orderBy(F.col("u_norm").desc(), F.col("cls").asc())
+    return scores.withColumn("rnk", F.row_number().over(pick))
 
 
 def fknn_classify(
@@ -87,30 +120,8 @@ def fknn_classify(
     conf = the winning class's normalized fuzzy membership, rounded
     to 6 decimals for cross-engine hash stability (SURVEY.md §7.1).
     """
-    knn = knn_join_blas(test, train, k=k, keep_q_cols=("label",))
-    knn = knn.withColumn(
-        "w", F.lit(1.0) / F.greatest(F.col("dist") * F.col("dist"), F.lit(EPS))
-    )
-    # total weight per query — an unbounded-frame window sum over the
-    # SAME q_id partitioning the top-k window just established, so it
-    # adds no exchange (round-12: previously a separate groupBy(q_id)
-    # aggregate joined back on q_id — one extra shuffle + one join,
-    # and the knn subtree's window/filter re-ran once per branch).
-    # Value-identical: the k weights are summed in the same
-    # (dist, n_id) order the partition is already sorted in.
-    wq = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
-    knn = knn.withColumn(
-        "tw", F.sum("w").over(wq.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    )
-    scores = (
-        knn.join(memberships, knn.n_id == memberships.vec_id)
-        .groupBy("q_id", "q_label", "cls", "tw")
-        .agg(F.sum(F.col("w") * F.col("u")).alias("s"))
-        .withColumn("u_norm", F.col("s") / F.col("tw"))
-    )
-    pick = Window.partitionBy("q_id").orderBy(F.col("u_norm").desc(), F.col("cls").asc())
     return (
-        scores.withColumn("rnk", F.row_number().over(pick))
+        fuzzy_scores(test, train, memberships, k=k)
         .where(F.col("rnk") == 1)
         .select(
             F.col("q_id").alias("vec_id"),

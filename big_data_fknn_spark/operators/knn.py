@@ -36,6 +36,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from big_data_fknn_spark.functions.distance import cosine_sim, euclidean, manhattan
 
@@ -155,7 +156,12 @@ def knn_join_blas(
     - only the batch-local top-k rows per query leave the kernel —
       the partial top-k below the exchange that WindowGroupLimit
       gives the expression path — then one small window merge
-      produces the global k.
+      produces the global k;
+    - keep columns ride the kernel, as in kNN-IS's map output: query
+      values in the broadcast tuple (fetched with the vectors),
+      candidate values through ``mapInPandas`` as columns — no join
+      brings them back.  Crossing pandas, a NaN comes back NULL and a
+      nullable integral candidate column is exact only to 2^53.
 
     Exactness: candidate sets are exact; boundary ties are resolved
     by (dist, n_id) inside the kernel via lexsort over a 2k+8 margin,
@@ -196,7 +202,13 @@ def knn_join_blas(
     spark = queries.sparkSession
     sc = spark.sparkContext
 
-    q_src = queries.select(F.col(q_id).alias("_q_id"), F.col(q_vec).alias("_q_vec"))
+    q_keep = [f"q_{c}" for c in keep_q_cols]
+    n_keep = [f"n_{c}" for c in keep_c_cols]
+    q_src = queries.select(
+        F.col(q_id).alias("_q_id"),
+        F.col(q_vec).alias("_q_vec"),
+        *[F.col(c).alias(a) for c, a in zip(keep_q_cols, q_keep)],
+    )
 
     # Round-12 fusion: ONE bounded fetch job both decides the strategy
     # and delivers the query set in the dominant single-chunk regime.
@@ -249,7 +261,14 @@ def knn_join_blas(
     _last_fallback = False
 
     cand = candidates.select(
-        F.col(c_id).alias("n_id"), F.col(c_vec).alias("_c_vec")
+        F.col(c_id).alias("n_id"),
+        F.col(c_vec).alias("_c_vec"),
+        *[F.col(c).alias(a) for c, a in zip(keep_c_cols, n_keep)],
+    )
+    # (q_id, q_*, n_id, n_*, dist), the keep columns typed as their inputs
+    out_schema = StructType(
+        [StructField("q_id", LongType()), *q_src.schema[2:], StructField("n_id", LongType())]
+        + [*cand.schema[2:], StructField("dist", DoubleType())]
     )
     # Round-12, measured and REJECTED: repartitioning an under-split
     # candidate scan (guide §2.5 "input skew" — a single-row-group
@@ -274,8 +293,7 @@ def knn_join_blas(
 
     margin = 2 * k + 8  # ties at the k-boundary stay deterministic
     parts = []
-    buf_ids: list[int] = []
-    buf_vecs: list = []
+    buf: list = []  # fetched query rows (_q_id, _q_vec, *q_keep)
     _last_peak_buffer_rows = 0
 
     # Admission (see docstring): dim inferred as the MODE of the first
@@ -291,7 +309,7 @@ def knn_join_blas(
         return len(vec) == _dim[0]
 
     def _flush() -> None:
-        if _dim[0] is None and buf_vecs:
+        if _dim[0] is None and buf:
             # Mode of the first chunk's lengths, not the first row's:
             # input-split order is not a contract, and a ragged row
             # that happens to arrive first must not hijack the kernel
@@ -302,25 +320,25 @@ def knn_join_blas(
             # UNIFORMLY the wrong length still wins the vote — callers
             # that bypass the EMB_ADMIT scan gate and cannot trust
             # their first chunk must pass ``dim`` explicitly.
-            counts = Counter(len(v) for v in buf_vecs)
+            counts = Counter(len(r[1]) for r in buf)
             _dim[0] = max(counts, key=lambda length: (counts[length], length))
             if len(counts) > 1:
-                keep = [
-                    i for i, v in enumerate(buf_vecs) if len(v) == _dim[0]
-                ]
-                buf_ids[:] = [buf_ids[i] for i in keep]
-                buf_vecs[:] = [buf_vecs[i] for i in keep]
-        qids = np.array(buf_ids, dtype=np.int64)
-        qmat = np.array(buf_vecs, dtype=np.float64)
-        buf_ids.clear()
-        buf_vecs.clear()
+                buf[:] = [r for r in buf if len(r[1]) == _dim[0]]
+        qids = np.array([r[0] for r in buf], dtype=np.int64)
+        qmat = np.array([r[1] for r in buf], dtype=np.float64)
+        # object arrays keep Python values (exact longs, NULLs) as fetched
+        qkeep = [
+            np.fromiter((r[j] for r in buf), dtype=object, count=len(buf))
+            for j in range(2, 2 + len(q_keep))
+        ]
+        buf.clear()
         if metric == "cosine_neg" and len(qmat):
             qn = np.linalg.norm(qmat, axis=1, keepdims=True)
             qmat = qmat / np.where(qn == 0.0, 1.0, qn)
-        bc = sc.broadcast((qids, qmat, _dim[0]))
+        bc = sc.broadcast((qids, qmat, _dim[0], qkeep))
 
         def kernel(batches, _bc=bc):
-            ids_q, Q, kdim = _bc.value
+            ids_q, Q, kdim, keep_q = _bc.value
             m = len(ids_q)
             if m == 0:
                 return
@@ -353,6 +371,7 @@ def knn_join_blas(
                         continue
                 C_all = np.vstack(pdf["_c_vec"].to_numpy())
                 ids_all = pdf["n_id"].to_numpy(dtype=np.int64)
+                keep_c = [pdf[a].to_numpy() for a in n_keep]
                 if metric == "cosine_neg":
                     cn = np.linalg.norm(C_all, axis=1, keepdims=True)
                     C_all = C_all / np.where(cn == 0.0, 1.0, cn)
@@ -377,58 +396,46 @@ def knn_join_blas(
                         D = np.sqrt(np.maximum(d2, 0.0))
                     take = min(margin, D.shape[1])
                     part = np.argpartition(D, take - 1, axis=1)[:, :take]
-                    out_q, out_n, out_d = [], [], []
+                    out_q, out_n = [], []
                     for i in range(m):
                         cols = part[i]
-                        order = np.lexsort((ids_c[cols], D[i, cols]))[: k + 1]
-                        sel = cols[order]
-                        out_q.append(np.full(len(sel), ids_q[i]))
-                        out_n.append(ids_c[sel])
-                        out_d.append(D[i, sel])
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.concatenate(out_q),
-                            "n_id": np.concatenate(out_n),
-                            "dist": np.concatenate(out_d),
-                        }
-                    )
+                        sel = cols[np.lexsort((ids_c[cols], D[i, cols]))[: k + 1]]
+                        out_q.append(np.full(len(sel), i))
+                        out_n.append(sel)
+                    qi = np.concatenate(out_q)
+                    ni = np.concatenate(out_n)
+                    out = {"q_id": ids_q[qi]}
+                    out.update((a, v[qi]) for a, v in zip(q_keep, keep_q))
+                    out["n_id"] = ids_c[ni]
+                    out.update((a, v[s + ni]) for a, v in zip(n_keep, keep_c))
+                    out["dist"] = D[qi, ni]
+                    yield pd.DataFrame(out)
 
-        parts.append(cand.mapInPandas(kernel, "q_id long, n_id long, dist double"))
+        parts.append(cand.mapInPandas(kernel, out_schema))
 
     # Stream the query side.  Single-chunk case (n_q ≤ chunk_rows —
     # the memory bound holds by construction): one fetch job, no
     # per-partition iteration latency.  Multi-chunk case:
     # toLocalIterator fetches one partition per job, so the driver's
-    # Python process holds ≤ one chunk of ids+vecs at any moment (the
+    # Python process holds ≤ one chunk of rows at any moment (the
     # numpy copy handed to broadcast is dropped as soon as the chunk
     # is flushed).
     if n_q == 0:
         _flush()  # empty chunk keeps the output schema stable
-    elif head is not None:
-        for row in head:  # bounded ≤ chunk_rows by the take above
-            if _admit(row[1]):
-                buf_ids.append(row[0])
-                buf_vecs.append(row[1])
-        _last_peak_buffer_rows = len(buf_ids)
-        _flush()
-    elif n_parts == 1:
-        for row in q_src.collect():  # bounded ≤ chunk_rows by the count
-            if _admit(row[1]):
-                buf_ids.append(row[0])
-                buf_vecs.append(row[1])
-        _last_peak_buffer_rows = len(buf_ids)
+    elif head is not None or n_parts == 1:
+        # bounded ≤ chunk_rows by the take above, or by the count
+        buf.extend(r for r in (head if head is not None else q_src.collect()) if _admit(r[1]))
+        _last_peak_buffer_rows = len(buf)
         _flush()
     else:
         for row in q_src.toLocalIterator(prefetchPartitions=False):
             if not _admit(row[1]):
                 continue
-            buf_ids.append(row[0])
-            buf_vecs.append(row[1])
-            if len(buf_ids) > _last_peak_buffer_rows:
-                _last_peak_buffer_rows = len(buf_ids)
-            if len(buf_ids) >= chunk_rows:
+            buf.append(row)
+            _last_peak_buffer_rows = max(_last_peak_buffer_rows, len(buf))
+            if len(buf) >= chunk_rows:
                 _flush()
-        if buf_ids:
+        if buf:
             _flush()
     if not parts:  # every query row non-conforming: stable empty output
         _flush()
@@ -440,18 +447,4 @@ def knn_join_blas(
     if exclude_self:
         topk = topk.where(F.col("q_id") != F.col("n_id"))
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
-    topk = topk.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-
-    if keep_q_cols:
-        qm = queries.select(
-            F.col(q_id).alias("q_id"),
-            *[F.col(c).alias(f"q_{c}") for c in keep_q_cols],
-        )
-        topk = topk.join(F.broadcast(qm), "q_id")
-    if keep_c_cols:
-        cm = candidates.select(
-            F.col(c_id).alias("n_id"),
-            *[F.col(c).alias(f"n_{c}") for c in keep_c_cols],
-        )
-        topk = topk.join(cm, "n_id")
-    return topk
+    return topk.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)

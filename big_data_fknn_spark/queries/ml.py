@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_fknn_spark.functions.distance import cosine_sim, euclidean, manhattan
-from big_data_fknn_spark.operators.fknn import fknn_pipeline, keller_memberships
+from big_data_fknn_spark.operators.fknn import (
+    fknn_pipeline,
+    fuzzy_scores,
+    keller_memberships,
+)
 from big_data_fknn_spark.operators.knn import knn_join_blas
 from big_data_fknn_spark.cache import cached
 from big_data_fknn_spark.queries import register
@@ -1037,28 +1041,10 @@ def j58_fknn_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical cost to j3 — the margin is free once the score
     table exists; at fleet scale you'd persist scores once and
     derive pred, conf, AND margin from the same table."""
-    from big_data_fknn_spark.operators.fknn import EPS
-
     train, test = train_test_split(spark, sf_dir)
-    memb = keller_memberships(train, k=K)
-    knn = knn_join_blas(test, train, k=K, keep_q_cols=("label",))
-    knn = knn.withColumn(
-        "w", F.lit(1.0) / F.greatest(F.col("dist") * F.col("dist"), F.lit(EPS))
-    )
-    totw = knn.groupBy("q_id").agg(F.sum("w").alias("tw"))
-    scores = (
-        knn.join(memb, knn.n_id == memb.vec_id)
-        .groupBy("q_id", "q_label", "cls")
-        .agg(F.sum(F.col("w") * F.col("u")).alias("s"))
-        .join(totw, "q_id")
-        .withColumn("u_norm", F.col("s") / F.col("tw"))
-    )
-    pick = Window.partitionBy("q_id").orderBy(
-        F.col("u_norm").desc(), F.col("cls").asc()
-    )
+    scores = fuzzy_scores(test, train, keller_memberships(train, k=K), k=K)
     top2 = (
-        scores.withColumn("rnk", F.row_number().over(pick))
-        .where(F.col("rnk") <= 2)
+        scores.where(F.col("rnk") <= 2)
         .groupBy(F.col("q_id").alias("vec_id"), F.col("q_label").alias("label"))
         .agg(
             F.max(F.when(F.col("rnk") == 1, F.col("cls"))).alias("pred"),

@@ -14,39 +14,63 @@ from big_data_fknn_spark.tables import embeddings_d, train_test_split
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def neighbor_set(df):
+# keep columns ride the kernel: an int label with NULLs on both the
+# query and the candidate side, plus a string and a double column
+KEEP = ("label", "tag", "half")
+
+
+def with_keeps(df):
+    return df.select(
+        "vec_id",
+        "emb",
+        F.when(F.col("vec_id") % 7 != 0, F.col("label")).alias("label"),
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("tag"),
+        (F.col("vec_id") / 2).alias("half"),
+    )
+
+
+def neighbor_set(df, keep=()):
+    kept = [f"{side}_{c}" for c in keep for side in ("q", "n")]
     return sorted(
-        (r["q_id"], r["rn"], r["n_id"], round(r["dist"], 9))
-        for r in df.select("q_id", "rn", "n_id", "dist").collect()
+        (r["q_id"], r["rn"], r["n_id"], round(r["dist"], 9), *[r[c] for c in kept])
+        for r in df.select("q_id", "rn", "n_id", "dist", *kept).collect()
     )
 
 
 @pytest.mark.parametrize("k", [1, 5, 11])
 def test_blas_matches_declarative(spark, k):
-    train, test = train_test_split(spark, SF_DIR)
-    a = neighbor_set(knn_join(test, train, k=k))
-    b = neighbor_set(knn_join_blas(test, train, k=k))
+    train, test = (with_keeps(df) for df in train_test_split(spark, SF_DIR))
+    kw = dict(k=k, keep_q_cols=KEEP, keep_c_cols=KEEP)
+    a = neighbor_set(knn_join(test, train, **kw), KEEP)
+    b = neighbor_set(knn_join_blas(test, train, **kw), KEEP)
     assert a == b
+    assert any(r[4] is None for r in b)  # a NULL query label rode through
+    assert any(r[5] is None for r in b)  # and a NULL candidate label
 
 
 def test_blas_exclude_self_leave_one_out(spark):
-    emb = embeddings_d(spark, SF_DIR)
-    a = neighbor_set(knn_join(emb, emb, k=3, exclude_self=True))
-    b = neighbor_set(knn_join_blas(emb, emb, k=3, exclude_self=True))
+    emb = with_keeps(embeddings_d(spark, SF_DIR))
+    kw = dict(k=3, exclude_self=True, keep_q_cols=KEEP, keep_c_cols=KEEP)
+    a = neighbor_set(knn_join(emb, emb, **kw), KEEP)
+    b = neighbor_set(knn_join_blas(emb, emb, **kw), KEEP)
     assert a == b
-    assert all(q != n for q, _, n, _ in b)
+    assert all(q != n for q, _, n, *_ in b)
 
 
 def test_blas_chunking_invariant(spark, monkeypatch):
     """Splitting the query side into many broadcast chunks must not
-    change results (the kNN-IS iterative scheme is result-neutral)."""
+    change results (the kNN-IS iterative scheme is result-neutral),
+    keep columns included."""
     import big_data_fknn_spark.operators.knn as knn_mod
 
-    train, test = train_test_split(spark, SF_DIR)
-    whole = neighbor_set(knn_join_blas(test, train, k=5))
+    train, test = (with_keeps(df) for df in train_test_split(spark, SF_DIR))
+    kw = dict(k=5, keep_q_cols=KEEP, keep_c_cols=KEEP)
+    want = neighbor_set(knn_join(test, train, **kw), KEEP)
+    whole = neighbor_set(knn_join_blas(test, train, **kw), KEEP)
     monkeypatch.setattr(knn_mod, "_CHUNK", 7)  # 100 queries → 15 chunks
-    chunked = neighbor_set(knn_join_blas(test, train, k=5))
-    assert whole == chunked
+    chunked = neighbor_set(knn_join_blas(test, train, **kw), KEEP)
+    assert knn_mod._last_num_chunks > 1
+    assert want == whole == chunked
 
 
 def test_blas_cosine_metric(spark):

@@ -105,16 +105,18 @@ def test_blas_kernel_falls_back_declarative_above_budget(spark, stress_path):
     same output contract and the same neighbors."""
     from big_data_fknn_spark.operators import knn
 
-    vecs = spark.read.parquet(stress_path)
-    probes = vecs.where(F.col("vec_id") % 100 == 0)  # 200 queries
-    blas = knn_join_blas(probes, vecs, k=4, keep_q_cols=(), keep_c_cols=())
-    assert knn._last_fallback is False
-    want = sorted(
-        (r["q_id"], r["rn"], r["n_id"]) for r in blas.collect()
+    vecs = spark.read.parquet(stress_path).withColumn(
+        "tag", F.when(F.col("vec_id") % 3 != 0, F.col("vec_id").cast("string"))
     )
-    fb = knn_join_blas(probes, vecs, k=4, max_broadcast_rows=100)
+    probes = vecs.where(F.col("vec_id") % 100 == 0)  # 200 queries
+    kw = dict(k=4, keep_q_cols=("tag",), keep_c_cols=("tag",))
+    cols = ("q_id", "rn", "n_id", "q_tag", "n_tag")
+    blas = knn_join_blas(probes, vecs, **kw)
+    assert knn._last_fallback is False
+    want = sorted(tuple(r) for r in blas.select(*cols).collect())
+    fb = knn_join_blas(probes, vecs, max_broadcast_rows=100, **kw)
     assert knn._last_fallback is True
-    got = sorted((r["q_id"], r["rn"], r["n_id"]) for r in fb.collect())
+    got = sorted(tuple(r) for r in fb.select(*cols).collect())
     assert got == want
 
 
@@ -446,8 +448,19 @@ def test_scan_parallelism_is_file_bound_not_plan_bound(spark, tmp_path):
 
     multi_dir = str(tmp_path / "lineitem8")
     src.repartition(8).write.mode("overwrite").parquet(multi_dir)
-    multi = spark.read.parquet(multi_dir)
-    assert multi.rdd.getNumPartitions() >= 8
+    # Spark packs small file splits against defaultParallelism: ask for
+    # 8 splits so the 8 files fan out below 8 cores too
+    key = "spark.sql.files.minPartitionNum"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "8")
+    try:
+        multi = spark.read.parquet(multi_dir)
+        assert multi.rdd.getNumPartitions() >= 8
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
     # identical aggregate, identical result, parallel scan
     def agg(df):
