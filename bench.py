@@ -100,16 +100,26 @@ def main() -> None:
     # execution: some operators do real cluster work at build time
     # (the kNN kernel's chunk fetches, connected-components'
     # localCheckpoint rounds), and excluding it would under-report.
+    # Construct runs under its own job group, so the status store says
+    # how many of those jobs each key's construct triggered (j31's
+    # connected-components rounds, x65's rank splits) — the same count
+    # perfbench/spans.py reads.  It is read after the exec, by which
+    # time the listener has recorded every construct job.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
-    runs: dict[str, list[tuple[float, float, float]]] = {k: [] for k in HEADLINE}
-    for _ in range(passes):
+    sc = spark.sparkContext
+    runs: dict[str, list[tuple[float, float, float, int]]] = {k: [] for k in HEADLINE}
+    for i in range(passes):
         for key in HEADLINE:
+            group = f"bench-construct-{i}-{key}"
+            sc.setJobGroup(group, key)
             t0 = time.perf_counter()
             df = registry[key].fn(spark, sf_dir)
             t1 = time.perf_counter()
+            sc.setLocalProperty("spark.jobGroup.id", None)
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            runs[key].append((t2 - t0, t1 - t0, t2 - t1))
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            runs[key].append((t2 - t0, t1 - t0, t2 - t1, jobs))
     timings: dict[str, float] = {}
     split: dict[str, dict[str, float]] = {}
     for key in HEADLINE:
@@ -122,22 +132,9 @@ def main() -> None:
             # the best-total attribution (comparable to r02-r09).
             "exec_s": round(best[2], 3),
             "exec_min_s": round(min(r[2] for r in runs[key]), 3),
+            # driver jobs the best-total pass's construct triggered
+            "construct_jobs": best[3],
         }
-
-    # diagnostic only (no clock change): j31's construct time is the
-    # connected-components rounds, each a real cluster job — record
-    # how many the last run took so the number is attributable.
-    from big_data_fknn_spark.operators import graph, rank  # noqa: E402
-
-    # x65 (the last headline query) is also the last rank.py caller,
-    # so LAST_REFINE_STAGES is its final metric's refinement stage
-    # count — expected 0 at bench sf: no tie bucket crosses the
-    # max(4x ideal, 10k rows) skew floor, i.e. the smooth-key fast
-    # path really runs zero extra jobs.
-    diagnostics = {
-        "j31_cc_rounds": graph.LAST_RUN_ROUNDS,
-        "x65_refine_stages": rank.LAST_REFINE_STAGES,
-    }
 
     # CONTROL: e1_topk_window's code is untouched since round 1, so
     # its exec drift round-over-round is pure machine state.  Each
@@ -234,7 +231,7 @@ def main() -> None:
     # could not read.  Since round 11 the stdout line carries ONLY the
     # contract fields plus the floor-check verdict, hard-capped below
     # the window; every diagnostic (split, control ratios, loadavg,
-    # cc-round counts) moves to bench_detail.json next to this file.
+    # construct job counts) moves to bench_detail.json next to this file.
     detail = {
         # which corpus produced these numbers — the suite's bench
         # smoke runs at sf0.001 and overwrites this file, so a reader
@@ -244,10 +241,10 @@ def main() -> None:
         # same clock as r02 (construct+exec); the split attributes
         # each query's time to plan construction (which for the kNN
         # kernel / connected components / global_rank does real
-        # cluster jobs) vs final execution.  exec_min_s is the
-        # floor-check statistic (min over all interleaved passes).
+        # cluster jobs, counted in construct_jobs) vs final execution.
+        # exec_min_s is the floor-check statistic (min over all
+        # interleaved passes).
         "queries_split": split,
-        "diagnostics": diagnostics,
         # e1 is the drift control (code untouched since r1): divide a
         # round's exec_vs_control by last round's per query — a moved
         # ratio is a code effect, a uniform absolute shift is machine.

@@ -46,7 +46,8 @@ def keller_memberships(train: DataFrame, k: int = 5) -> DataFrame:
     """Stage 1: sparse membership table ``(vec_id, cls, u)``.
 
     ``train`` needs columns (vec_id, emb: array<double>, label).  A
-    point with no neighbor at all (one-row train set) gets no row.
+    point with no neighbor at all (one-row train set) gets no row;
+    stage 2 gives it its own class at u = 0.51.
     """
     knn = knn_join_blas(
         train,
@@ -88,7 +89,7 @@ def fuzzy_scores(
     """Stage-2 class scores ``(q_id, q_label, cls, u_norm, rnk)``: the
     normalized fuzzy membership of each evidenced class per test point,
     ``rnk`` ranking a point's classes by (u_norm desc, cls)."""
-    knn = knn_join_blas(test, train, k=k, keep_q_cols=("label",))
+    knn = knn_join_blas(test, train, k=k, keep_q_cols=("label",), keep_c_cols=("label",))
     knn = knn.withColumn(
         "w", F.lit(1.0) / F.greatest(F.col("dist") * F.col("dist"), F.lit(EPS))
     )
@@ -100,9 +101,9 @@ def fuzzy_scores(
         "tw", F.sum("w").over(wq.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     )
     scores = (
-        knn.join(memberships, knn.n_id == memberships.vec_id)
-        .groupBy("q_id", "q_label", "cls", "tw")
-        .agg(F.sum(F.col("w") * F.col("u")).alias("s"))
+        knn.join(memberships, knn.n_id == memberships.vec_id, "left")
+        .groupBy("q_id", "q_label", F.coalesce("cls", "n_label").alias("cls"), "tw")
+        .agg(F.sum(F.col("w") * F.coalesce("u", F.lit(0.51))).alias("s"))
         .withColumn("u_norm", F.col("s") / F.col("tw"))
     )
     pick = Window.partitionBy("q_id").orderBy(F.col("u_norm").desc(), F.col("cls").asc())

@@ -26,9 +26,7 @@ Round-4 construct-cost cuts (j31's bench time is ~all CC rounds):
   join-back-to-previous-labels + count, i.e. one fewer shuffle join
   per round;
 * non-convergence within ``max_iter`` now RAISES instead of silently
-  returning non-fixpoint labels, and the round count of the last run
-  is exposed (``LAST_RUN_ROUNDS``) so the bench can attribute j31's
-  construct time.
+  returning non-fixpoint labels.
 
 Round-12 (optimization round) action fusion: every ``localCheckpoint``
 here is LAZY (``eager=False``).  A lazy local checkpoint marks the
@@ -53,12 +51,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Propagation rounds (including the fused init round and the final
-#: no-change detection round) of the most recent call — a diagnostic
-#: read by bench.py to attribute j31_dedup_survivors' construct cost.
-LAST_RUN_ROUNDS: int = 0
-
 
 _FPRINT_EXPRS = (
     lambda: F.sum(F.col("lab").cast("decimal(38,0)")).alias("s"),
@@ -109,7 +101,6 @@ def connected_components(
     rounds (component diameter exceeds the budget) rather than
     returning wrong labels.
     """
-    global LAST_RUN_ROUNDS
     from pyspark.sql import types as T
 
     # The convergence fingerprint and the min-label lattice both need
@@ -202,7 +193,6 @@ def connected_components(
             converged = True
             break
         prev_sum = s
-    LAST_RUN_ROUNDS = rounds
     if not converged:
         raise ValueError(
             f"connected_components did not converge in {max_iter} rounds — "

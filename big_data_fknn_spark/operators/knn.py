@@ -57,12 +57,6 @@ _TILE_CELLS = 2_000_000
 # declarative `knn_join`, which never materializes anything driver-side.
 _MAX_BROADCAST_ROWS = 4_000_000
 
-# Instrumentation for tests/test_scale_stress.py: how the last call
-# executed.  Not part of the public contract.
-_last_num_chunks = 0
-_last_peak_buffer_rows = 0
-_last_fallback = False
-
 
 def knn_join(
     queries: DataFrame,
@@ -125,8 +119,6 @@ def knn_join_blas(
     exclude_self: bool = False,
     keep_q_cols: tuple[str, ...] = (),
     keep_c_cols: tuple[str, ...] = (),
-    chunk_rows: int | None = None,
-    max_broadcast_rows: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
     """`knn_join` with an Arrow-batched BLAS distance kernel — same
@@ -193,10 +185,6 @@ def knn_join_blas(
     import numpy as np
     import pandas as pd
 
-    global _last_num_chunks, _last_peak_buffer_rows, _last_fallback
-
-    chunk_rows = chunk_rows or _CHUNK
-    max_broadcast_rows = max_broadcast_rows or _MAX_BROADCAST_ROWS
     q_id, q_vec = q_cols
     c_id, c_vec = c_cols
     spark = queries.sparkSession
@@ -212,36 +200,33 @@ def knn_join_blas(
 
     # Round-12 fusion: ONE bounded fetch job both decides the strategy
     # and delivers the query set in the dominant single-chunk regime.
-    # ``take(chunk_rows + 1)`` holds at most one chunk (+1 row) on the
+    # ``take(_CHUNK + 1)`` holds at most one chunk (+1 row) on the
     # driver — exactly the memory envelope the old count()-then-
     # collect() pair guaranteed — but replaces its two full passes
     # over the query scan with one.  ``initialNumPartitions`` is
     # raised for the call so the limit scans every partition in a
     # single job instead of the default 1, 4, 16… escalation (4 tiny
     # jobs on a 32-partition input).  Only when the bound trips
-    # (> chunk_rows rows exist) do we pay the count that the
+    # (> _CHUNK rows exist) do we pay the count that the
     # multi-chunk / fallback decision needs — there the extra job is
     # noise against the work that follows.
     _LIM_KEY = "spark.sql.limit.initialNumPartitions"
     _lim_old = spark.conf.get(_LIM_KEY, None)
     spark.conf.set(_LIM_KEY, "100000")
     try:
-        head = q_src.take(chunk_rows + 1)
+        head = q_src.take(_CHUNK + 1)
     finally:
         if _lim_old is None:
             spark.conf.unset(_LIM_KEY)
         else:
             spark.conf.set(_LIM_KEY, _lim_old)
-    if len(head) <= chunk_rows:
+    if len(head) <= _CHUNK:
         n_q = len(head)
     else:
         head = None
         # One distributed count decides the strategy; it never moves rows.
         n_q = queries.count()
-    if n_q > max_broadcast_rows:
-        _last_fallback = True
-        _last_num_chunks = 0
-        _last_peak_buffer_rows = 0
+    if n_q > _MAX_BROADCAST_ROWS:
         col_metric = {
             "euclidean": euclidean,
             "manhattan": manhattan,
@@ -258,7 +243,6 @@ def knn_join_blas(
             keep_q_cols=keep_q_cols,
             keep_c_cols=keep_c_cols,
         )
-    _last_fallback = False
 
     cand = candidates.select(
         F.col(c_id).alias("n_id"),
@@ -285,16 +269,15 @@ def knn_join_blas(
     # the caller's layout problem (fix at the writer, guide §2.5).
 
     # Bound what any single fetch can hold: hash-repartition the query
-    # side into ≈chunk_rows partitions, then pull them one at a time.
+    # side into ≈_CHUNK-row partitions, then pull them one at a time.
     # (Skipped when the bounded take above already holds the full set.)
-    n_parts = max(1, math.ceil(n_q / chunk_rows))
+    n_parts = max(1, math.ceil(n_q / _CHUNK))
     if head is None and n_parts > 1:
         q_src = q_src.repartition(n_parts, "_q_id")
 
     margin = 2 * k + 8  # ties at the k-boundary stay deterministic
     parts = []
     buf: list = []  # fetched query rows (_q_id, _q_vec, *q_keep)
-    _last_peak_buffer_rows = 0
 
     # Admission (see docstring): dim inferred as the MODE of the first
     # chunk's vector lengths unless declared; non-conforming rows never
@@ -413,7 +396,7 @@ def knn_join_blas(
 
         parts.append(cand.mapInPandas(kernel, out_schema))
 
-    # Stream the query side.  Single-chunk case (n_q ≤ chunk_rows —
+    # Stream the query side.  Single-chunk case (n_q ≤ _CHUNK —
     # the memory bound holds by construction): one fetch job, no
     # per-partition iteration latency.  Multi-chunk case:
     # toLocalIterator fetches one partition per job, so the driver's
@@ -423,23 +406,20 @@ def knn_join_blas(
     if n_q == 0:
         _flush()  # empty chunk keeps the output schema stable
     elif head is not None or n_parts == 1:
-        # bounded ≤ chunk_rows by the take above, or by the count
+        # bounded ≤ _CHUNK by the take above, or by the count
         buf.extend(r for r in (head if head is not None else q_src.collect()) if _admit(r[1]))
-        _last_peak_buffer_rows = len(buf)
         _flush()
     else:
         for row in q_src.toLocalIterator(prefetchPartitions=False):
             if not _admit(row[1]):
                 continue
             buf.append(row)
-            _last_peak_buffer_rows = max(_last_peak_buffer_rows, len(buf))
-            if len(buf) >= chunk_rows:
+            if len(buf) >= _CHUNK:
                 _flush()
         if buf:
             _flush()
     if not parts:  # every query row non-conforming: stable empty output
         _flush()
-    _last_num_chunks = len(parts)
 
     topk = parts[0]
     for p in parts[1:]:

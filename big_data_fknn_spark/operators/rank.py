@@ -145,13 +145,6 @@ _TWO_LEVEL_MIN = 64
 # in-bucket sort is exact) rather than paying unbounded construct jobs.
 _MAX_REFINE_STAGES = 24
 
-#: observability only (mirrors graph.LAST_RUN_ROUNDS): how many
-#: refinement stages the most recent _refine_loop actually ran jobs
-#: for — 0 whenever no tie bucket exceeded the skew threshold, which
-#: is the expected value for smooth-keyed callers (bench surfaces it
-#: as diagnostics.x65_refine_stages).
-LAST_REFINE_STAGES = 0
-
 
 def _resolve(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
@@ -475,14 +468,11 @@ def _refine_loop(
     """
     from pyspark.sql import types as T
 
-    global LAST_REFINE_STAGES
-
     level = 1
     off = 1  # 1-based byte offset of the current string window
     cont = False  # are tie_ids continuation ties of order[level] itself?
     flags = {b: True for b in tie_ids}  # may advance past their column
     stages = 0
-    LAST_REFINE_STAGES = 0
     while level < len(order) and tie_ids and stages < _MAX_REFINE_STAGES:
         total = sum(counts.values())
         threshold = max(_SKEW_FACTOR * total / max(n, 1), float(_MIN_SKEW_ROWS))
@@ -515,7 +505,6 @@ def _refine_loop(
         if sub_n < 2:
             break
         stages += 1  # every path past here runs the grouped stage job
-        LAST_REFINE_STAGES = stages
         if is_str:
             # evidence for (a) advancing past this column — every row
             # consumed within the covered windows and NUL-free, so

@@ -75,8 +75,6 @@ def events_stream(
             os.symlink(target, link)
         except FileExistsError:  # concurrent invocation won the race
             pass
-    global LAST_SRC_DIR
-    LAST_SRC_DIR = src_dir  # diagnostic: the canonical per-source dir
     # recursiveFileLookup: the `events.parquet` table is ONE file in
     # the driver testdata but a DIRECTORY of part files under any
     # real multi-executor writer (and under the round-9 input-sharding
@@ -108,12 +106,6 @@ def events_stream(
         )
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
-
-# Last canonical stream-source dir / memory-sink checkpoint dir created
-# by THIS process — test attribution that doesn't race against other
-# processes globbing the shared tempdir (round-7 advisor).
-LAST_SRC_DIR: str | None = None
-LAST_CKPT_DIR: str | None = None
 
 # run_to_memory lifts the drained sink into a LocalRelation (enabling
 # eager sink/checkpoint teardown) only below this row count — the
@@ -153,10 +145,8 @@ def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     import atexit
     import shutil
 
-    global LAST_CKPT_DIR
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    LAST_CKPT_DIR = ckpt  # diagnostic: lets tests assert THIS dir is torn down
     spark = stream_df.sparkSession
     # teardown in finally: a stream that ABORTS mid-batch (e.g. x55's
     # documented contract raise surfacing through awaitTermination)

@@ -11,6 +11,7 @@ equality — if this passes, the driver's hash comparison passes.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 from decimal import Decimal
 
@@ -98,6 +99,18 @@ def df_canon(pdf: pd.DataFrame):
         for row in pdf[cols].itertuples(index=False, name=None)
     )
     return cols, rows
+
+
+def raw_hash(pdf: pd.DataFrame) -> tuple[str, int]:
+    """(md5, row count) over every cell's raw ``str(v)``, columns
+    sorted by name and rows sorted: the driver's strict hash, with no
+    rounding or NULL/NaN conflation (stricter than ``df_canon``)."""
+    cols = sorted(pdf.columns)
+    rows = sorted(
+        tuple(str(v) for v in row)
+        for row in pdf[cols].itertuples(index=False, name=None)
+    )
+    return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, key: str = "?"):

@@ -72,17 +72,14 @@ def test_bench_emits_contract_json():
     for k, t in out["queries"].items():
         s = detail["queries_split"][k]
         assert t >= 0 and s["construct_s"] >= 0 and s["exec_s"] >= 0
+        assert s["construct_jobs"] >= 0, (k, s)
         # split components must reassemble the combined time (rounding slop)
         assert abs((s["construct_s"] + s["exec_s"]) - t) < 0.05, (k, s, t)
         # exec_min_s is the floor-check statistic — min over ALL
         # passes, so never above the best-total pass's exec
         assert s["exec_min_s"] <= s["exec_s"] + 1e-9, (k, s)
-    diag = detail["diagnostics"]
-    # j31 ran connected components at least once; x65's quintile keys
-    # never cross the skew floor at any bench sf, so the rank fast
-    # path must record ZERO refinement stages (extra construct jobs)
-    assert diag["j31_cc_rounds"] >= 1, diag
-    assert diag["x65_refine_stages"] == 0, diag
+    # j31's construct runs connected components: real cluster jobs
+    assert detail["queries_split"]["j31_dedup_survivors"]["construct_jobs"] >= 1
     # per-query exec-vs-control ratios — the recorded form of the
     # "environmental vs code effect" attribution judges re-derived by
     # hand in r4/6/8

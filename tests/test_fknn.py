@@ -1,6 +1,6 @@
 """Two-stage FkNN edge cases on hand-built inputs: the stage-1 Keller
 memberships against the formula computed in Python, and stage 2's
-pass-through of a NULL test label."""
+pass-through of a NULL test label, also over a one-row train set."""
 
 from __future__ import annotations
 
@@ -75,3 +75,13 @@ def test_stage2_passes_null_test_label_through(spark):
     assert out[100]["label"] == 0 and out[100]["pred"] == 0
     assert out[101]["label"] is None and out[101]["pred"] == 1
     assert out[102]["label"] is None and out[102]["pred"] == 0
+
+    # a one-row train set: its point has no leave-one-out neighbor, so
+    # no membership row; every test point still gets its class at
+    # Keller's own-class value 0.51
+    one = train.where("vec_id = 0")
+    got = sorted(
+        tuple(r) for r in fknn_classify(test, one, keller_memberships(one, k=K), k=K).collect()
+    )
+    assert got == [(100, 0, 0, 0.51), (101, None, 0, 0.51), (102, None, 0, 0.51)]
+

@@ -7,9 +7,9 @@ from __future__ import annotations
 from big_data_fknn_spark.operators.graph import connected_components
 
 
-def _cc(spark, edges):
+def _cc(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src: bigint, dst: bigint")
-    rows = connected_components(df).collect()
+    rows = connected_components(df, **kw).collect()
     return {r["node"]: r["component"] for r in rows}
 
 
@@ -77,33 +77,29 @@ def test_random_graphs_match_union_find(spark):
 
 
 def test_rounds_counter_and_nonconvergence_raise(spark):
-    # a 6-chain converges well inside 16 rounds and the counter
-    # reflects single-digit rounds; with max_iter too small for the
-    # diameter the call must raise, never return non-fixpoint labels
+    # a 6-chain converges in single-digit rounds: within max_iter=7,
+    # i.e. at most 8 rounds counting the fused init round; with
+    # max_iter too small for the diameter the call must raise, never
+    # return non-fixpoint labels
     import pytest
 
-    from big_data_fknn_spark.operators import graph
-
     chain = [(i, i + 1) for i in range(1, 7)]
-    got = _cc(spark, chain)
+    got = _cc(spark, chain, max_iter=7)
     assert got == {i: 1 for i in range(1, 8)}
-    assert 1 <= graph.LAST_RUN_ROUNDS <= 8
 
     df = spark.createDataFrame(chain, "src: bigint, dst: bigint")
     with pytest.raises(ValueError, match="did not converge"):
-        graph.connected_components(df, max_iter=1)
+        connected_components(df, max_iter=1)
 
 
 def test_deep_chain_converges_via_pointer_jumping(spark):
     # diameter 299: plain min-label propagation needs ~299 rounds, far
     # past max_iter=16 — the adaptive pointer-jumping (label <- label's
-    # label from round 4) must converge in O(log d) rounds instead
-    from big_data_fknn_spark.operators import graph
-
+    # label from round 4) must converge in O(log d) rounds instead,
+    # at most 16 counting the fused init round (max_iter=15)
     chain = [(i, i + 1) for i in range(1, 300)]
-    got = _cc(spark, chain)
+    got = _cc(spark, chain, max_iter=15)
     assert got == {i: 1 for i in range(1, 301)}
-    assert graph.LAST_RUN_ROUNDS <= 16
 
 
 def test_non_integral_and_null_node_ids_rejected(spark):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_fknn_spark.operators.knn import knn_join, knn_join_blas
+from big_data_fknn_spark.plans import executed_plan
 from big_data_fknn_spark.tables import embeddings_d, train_test_split
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -68,8 +69,9 @@ def test_blas_chunking_invariant(spark, monkeypatch):
     want = neighbor_set(knn_join(test, train, **kw), KEEP)
     whole = neighbor_set(knn_join_blas(test, train, **kw), KEEP)
     monkeypatch.setattr(knn_mod, "_CHUNK", 7)  # 100 queries → 15 chunks
-    chunked = neighbor_set(knn_join_blas(test, train, **kw), KEEP)
-    assert knn_mod._last_num_chunks > 1
+    out = knn_join_blas(test, train, **kw)
+    assert executed_plan(out).count("MapInPandas") > 1  # one kernel per chunk
+    chunked = neighbor_set(out, KEEP)
     assert want == whole == chunked
 
 

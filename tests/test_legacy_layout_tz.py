@@ -23,7 +23,6 @@ Cost: ~2 extra small Spark sessions over sf0.001 (~1.5 min).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import subprocess
 import sys
@@ -31,6 +30,7 @@ import sys
 import pytest
 
 from big_data_fknn_spark.queries import load_all
+from tests.oracle import raw_hash
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
@@ -43,15 +43,6 @@ DEFS = load_all()
 KEYS = ("i1_tumbling", "i8_foreachbatch_upsert")
 
 ZONES = ("America/New_York", "Asia/Kolkata")
-
-
-def _h(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(str(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    )
-    return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
 
 
 @pytest.fixture(scope="module")
@@ -75,13 +66,13 @@ def legacy_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("key", KEYS)
 def test_legacy_layout_matches_ntz_layout_under_utc(spark, legacy_dir, key):
-    got = _h(DEFS[key].fn(spark, legacy_dir).toPandas())
-    want = _h(DEFS[key].fn(spark, SF_DIR).toPandas())
+    got = raw_hash(DEFS[key].fn(spark, legacy_dir).toPandas())
+    want = raw_hash(DEFS[key].fn(spark, SF_DIR).toPandas())
     assert got == want
 
 
 _SUBPROC = r"""
-import hashlib, os, sys
+import os, sys
 tz, sf, keys, repo = sys.argv[1:5]
 os.environ["TZ"] = tz
 import time; time.tzset()
@@ -97,14 +88,10 @@ b = (SparkSession.builder.master("local[4]")
 spark = b.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 from big_data_fknn_spark.queries import load_all
+from tests.oracle import raw_hash
 reg = load_all()
 for key in keys.split(","):
-    pdf = reg[key].fn(spark, sf).toPandas()
-    cols = sorted(pdf.columns)
-    rows = sorted(tuple(str(v) for v in r)
-                  for r in pdf[cols].itertuples(index=False, name=None))
-    print("HASH", key, hashlib.md5(repr(rows).encode()).hexdigest(), len(rows),
-          flush=True)
+    print("HASH", key, *raw_hash(reg[key].fn(spark, sf).toPandas()), flush=True)
 spark.stop()
 """
 
@@ -112,7 +99,7 @@ spark.stop()
 @pytest.mark.parametrize("tz", ZONES)
 def test_legacy_layout_invariant_under_non_utc_session(spark, legacy_dir, tz, tmp_path):
     # ground truth: the suite's UTC session over the SAME legacy dir
-    want = {k: _h(DEFS[k].fn(spark, legacy_dir).toPandas()) for k in KEYS}
+    want = {k: raw_hash(DEFS[k].fn(spark, legacy_dir).toPandas()) for k in KEYS}
 
     script = tmp_path / "probe.py"
     script.write_text(_SUBPROC)

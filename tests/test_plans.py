@@ -528,7 +528,7 @@ def test_no_single_partition_window_over_entities(spark):
     )
 
 
-def test_temp_view_registrations_do_not_accumulate(spark):
+def test_temp_view_registrations_do_not_accumulate(spark, monkeypatch, tmp_path):
     """Round-3 verdict item 3 / round-2 advisor: queries that register
     temp views (or UDTFs) must not leak a catalog entry per call — a
     long-lived session serving many queries would accumulate metadata
@@ -564,26 +564,22 @@ def test_temp_view_registrations_do_not_accumulate(spark):
     # round-6 verdict: the streaming file source must not leave one
     # /tmp symlink dir per invocation either (events_stream now reuses
     # a canonical per-source-path dir, run_to_memory removes its
-    # checkpoint).  Attribution is via the module's LAST_* diagnostics
-    # — NOT a glob over the shared tempdir, which races against any
-    # concurrent process creating its own stream dirs between the two
-    # snapshots (round-7 advisor).
-    from big_data_fknn_spark.streaming import replay
+    # checkpoint).  The tempdir is this test's own, so no concurrent
+    # process can create stream dirs between the snapshots (round-7
+    # advisor).
+    import tempfile
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     for key in ("a6_stream_source", "i4_watermark"):
         DEFS[key].fn(spark, SF_DIR)  # warm: creates the canonical symlink dir
-        first_src = replay.LAST_SRC_DIR
         DEFS[key].fn(spark, SF_DIR)
+        made = os.listdir(tmp_path)
         # the canonical per-source dir is REUSED, not re-created…
-        assert replay.LAST_SRC_DIR == first_src and os.path.isdir(first_src), (
-            f"{key} did not reuse the canonical stream-source dir: "
-            f"{first_src} -> {replay.LAST_SRC_DIR}"
-        )
-        # …and the memory-sink checkpoint of THIS call is torn down
-        if replay.LAST_CKPT_DIR is not None:
-            assert not os.path.exists(replay.LAST_CKPT_DIR), (
-                f"{key} leaked its checkpoint dir {replay.LAST_CKPT_DIR}"
-            )
+        src_dirs = [d for d in made if d.startswith("events_stream_")]
+        assert len(src_dirs) == 1, f"{key} left stream-source dirs {src_dirs}"
+        # …and every memory-sink checkpoint is torn down
+        ckpts = [d for d in made if d.startswith("ckpt_sink_")]
+        assert not ckpts, f"{key} leaked checkpoint dirs {ckpts}"
 
 
 # Measured at sf0.001 (pre-AQE executed plans, pyspark 4.1.2); a

@@ -1481,3 +1481,43 @@ def test_global_running_agg_property_fuzz(spark, monkeypatch, seed):
             f"seed={seed} scenario={scenario} agg={agg} excl={exclusive} "
             f"asc=({asc_v},{asc_s}) first_bad={sorted(bad.items())[:5]}"
         )
+
+
+def test_x65_construct_runs_no_refinement_stage(spark, monkeypatch):
+    # x65's quintile keys never cross the skew floor at bench scale, so
+    # the smooth-key fast path runs zero refinement stages: capping
+    # the stages at 0 must leave its construct-time job count as is.
+    # 32 rank buckets (a 32-core session) give x65 tie buckets, so a
+    # lowered skew floor would refine them; at 4 buckets it has none.
+    import uuid
+
+    from big_data_fknn_spark.operators import rank
+    from big_data_fknn_spark.queries import load_all
+
+    fn = load_all()["x65_rfm_segmentation"].fn
+    sc = spark.sparkContext
+
+    def construct_jobs():
+        group = f"x65-construct-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "x65 construct")
+        try:
+            df = fn(spark, "/root/testdata/sf0.001")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # executing the result first gives the status store time to
+        # record every construct job
+        df.write.format("noop").mode("overwrite").save()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        construct_jobs()  # warm-up
+        as_is = construct_jobs()
+        monkeypatch.setattr(rank, "_MAX_REFINE_STAGES", 0)
+        capped = construct_jobs()
+    finally:
+        spark.conf.set(key, old)
+    assert as_is >= 1
+    assert capped == as_is

@@ -69,20 +69,37 @@ def test_blas_kernel_2k_x_20k_under_budget(spark, stress_path):
     assert got == want
 
 
-def test_blas_kernel_streams_chunks_no_full_collect(spark, stress_path):
+def test_blas_kernel_streams_chunks_no_full_collect(spark, stress_path, monkeypatch):
     """The kNN-IS iterative chunk scheme: a query side ≥10× the chunk
     size must flow through the kernel as many bounded fetches — the
     driver's Python buffer never holds more than one chunk — and still
     produce exactly the neighbors the declarative plan produces."""
     from big_data_fknn_spark.operators import knn
+    from big_data_fknn_spark.plans import executed_plan
 
     vecs = spark.read.parquet(stress_path)
-    chunk = 1_500  # 20k queries / 1.5k chunk = 14 chunks ≥ 10×
-    out = knn_join_blas(vecs, vecs, k=3, exclude_self=True, chunk_rows=chunk)
+    # 20k queries / 1.25k chunk = 16 chunks ≥ 10×; the query side is
+    # hashed into 16 partitions of 1.25k rows on average, so about half
+    # of them hold more than a chunk: only the chunk-bound flush keeps
+    # every broadcast within one chunk
+    chunk = 1_250
+    monkeypatch.setattr(knn, "_CHUNK", chunk)
+    # each chunk the driver buffers leaves as one broadcast of
+    # (ids, matrix, dim, keep columns): record its query-row count
+    sc = spark.sparkContext
+    sizes = []
+    broadcast = sc.broadcast
+
+    def spy(value):
+        sizes.append(len(value[0]))
+        return broadcast(value)
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    out = knn_join_blas(vecs, vecs, k=3, exclude_self=True)
+    n_kernels = executed_plan(out).count("MapInPandas")
+    assert n_kernels >= 10, n_kernels
+    assert max(sizes) <= chunk, sizes
     assert out.count() == N_CAND * 3
-    assert knn._last_fallback is False
-    assert knn._last_num_chunks >= 10, knn._last_num_chunks
-    assert knn._last_peak_buffer_rows <= chunk, knn._last_peak_buffer_rows
 
     # value parity on a probe subset vs numpy ground truth
     pdf = vecs.orderBy("vec_id").toPandas()
@@ -99,11 +116,12 @@ def test_blas_kernel_streams_chunks_no_full_collect(spark, stress_path):
         assert got == want, row_q
 
 
-def test_blas_kernel_falls_back_declarative_above_budget(spark, stress_path):
+def test_blas_kernel_falls_back_declarative_above_budget(spark, stress_path, monkeypatch):
     """Above the broadcast-row budget the call must switch to the
     declarative knn_join plan (zero driver materialization) with the
     same output contract and the same neighbors."""
     from big_data_fknn_spark.operators import knn
+    from big_data_fknn_spark.plans import has_operator
 
     vecs = spark.read.parquet(stress_path).withColumn(
         "tag", F.when(F.col("vec_id") % 3 != 0, F.col("vec_id").cast("string"))
@@ -112,10 +130,11 @@ def test_blas_kernel_falls_back_declarative_above_budget(spark, stress_path):
     kw = dict(k=4, keep_q_cols=("tag",), keep_c_cols=("tag",))
     cols = ("q_id", "rn", "n_id", "q_tag", "n_tag")
     blas = knn_join_blas(probes, vecs, **kw)
-    assert knn._last_fallback is False
+    assert has_operator(blas, "MapInPandas")
     want = sorted(tuple(r) for r in blas.select(*cols).collect())
-    fb = knn_join_blas(probes, vecs, max_broadcast_rows=100, **kw)
-    assert knn._last_fallback is True
+    monkeypatch.setattr(knn, "_MAX_BROADCAST_ROWS", 100)
+    fb = knn_join_blas(probes, vecs, **kw)
+    assert not has_operator(fb, "MapInPandas")
     got = sorted(tuple(r) for r in fb.select(*cols).collect())
     assert got == want
 

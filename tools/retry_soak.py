@@ -52,7 +52,6 @@ must still be attempt-invariant.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
@@ -61,6 +60,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+
+from tests.oracle import raw_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
@@ -147,15 +148,6 @@ def _patch_readers():
         setattr(DataFrameReader, name, patched)
 
 
-def _hash(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(str(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    )
-    return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
-
-
 def _session(spec: bool):
     from pyspark.sql import SparkSession
 
@@ -184,7 +176,7 @@ def _run_key(spark, qs, key: str, mode: str):
     try:
         df = qs[key](spark, SF)  # SF rebound by --sf-dir in main()
         w = _wrap(df, f"result:{key}")
-        return _hash((w if w is not None else df).toPandas())
+        return raw_hash((w if w is not None else df).toPandas())
     finally:
         spark.sparkContext.setLocalProperty(_MODE_KEY, "")
 

@@ -289,20 +289,11 @@ def hash_parity(spark, dst: str, json_path: str | None = None) -> None:
     attribute the heavy tail, so a Spark-superlinear key could hide
     inside an expensive oracle.  ``--json PATH`` writes the per-key
     artifact."""
-    import hashlib
-
     import duckdb
 
     from big_data_fknn_spark.cache import release_query_caches
     from big_data_fknn_spark.queries import load_all
-
-    def h(pdf):
-        cols = sorted(pdf.columns)
-        rows = sorted(
-            tuple(str(v) for v in row)
-            for row in pdf[cols].itertuples(index=False, name=None)
-        )
-        return hashlib.md5(repr(rows).encode()).hexdigest(), len(rows)
+    from tests.oracle import raw_hash
 
     reg = load_all()
     con = duckdb.connect()
@@ -358,8 +349,8 @@ def hash_parity(spark, dst: str, json_path: str | None = None) -> None:
             }
             continue
         oracle_s = round(time.time() - t1, 1)
-        hs, ns = h(pdf)
-        ho, no = h(opdf)
+        hs, ns = raw_hash(pdf)
+        ho, no = raw_hash(opdf)
         ok = hs == ho and ns == no
         print(
             f"  HASH {key:28s} {'MATCH' if ok else 'MISMATCH'}"
