@@ -104,14 +104,18 @@ def main() -> None:
     # how many of those jobs each key's construct triggered (j31's
     # connected-components rounds, x65's rank splits) — the same count
     # perfbench/spans.py reads.  It is read after the exec, by which
-    # time the listener has recorded every construct job.
+    # time the listener has recorded every construct job.  Janino
+    # compiles (construct + exec) show whether a pass found its
+    # generated classes in Spark's codegen cache.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     sc = spark.sparkContext
-    runs: dict[str, list[tuple[float, float, float, int]]] = {k: [] for k in HEADLINE}
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    runs: dict[str, list[tuple[float, float, float, int, int]]] = {k: [] for k in HEADLINE}
     for i in range(passes):
         for key in HEADLINE:
             group = f"bench-construct-{i}-{key}"
             sc.setJobGroup(group, key)
+            c0 = compiles.getCount()
             t0 = time.perf_counter()
             df = registry[key].fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -119,7 +123,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            runs[key].append((t2 - t0, t1 - t0, t2 - t1, jobs))
+            runs[key].append((t2 - t0, t1 - t0, t2 - t1, jobs, compiles.getCount() - c0))
     timings: dict[str, float] = {}
     split: dict[str, dict[str, float]] = {}
     for key in HEADLINE:
@@ -134,6 +138,8 @@ def main() -> None:
             "exec_min_s": round(min(r[2] for r in runs[key]), 3),
             # driver jobs the best-total pass's construct triggered
             "construct_jobs": best[3],
+            # classes Janino compiled in that pass (0 = all cached)
+            "codegen_compiles": best[4],
         }
 
     # CONTROL: e1_topk_window's code is untouched since round 1, so

@@ -70,6 +70,14 @@ def get_spark(app_name: str = "big_data_fknn_spark", cpus: int | None = None) ->
         # host.  The module re-reads only an archive whose stat
         # changed; an FkNN job's process-tree CPU fell 22%.
         .config("spark.python.daemon.module", "big_data_fknn_spark.worker")
+        # Generated-class cache (LRU, static conf, default 100).  One
+        # pass over perfbench's registry_mix keys generates 183-191
+        # distinct classes, bench.py's 14-key headline about 400 at
+        # sf0.01, both together 576: at 100 every class is evicted
+        # before its next use, so each pass re-ran Janino on all of
+        # them and the JIT recompiled the fresh classes.  1000 holds
+        # the working set.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local mode: the driver JVM IS the executor — give it real
         # memory (shuffles spill if exceeded)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())

@@ -73,6 +73,7 @@ def test_bench_emits_contract_json():
         s = detail["queries_split"][k]
         assert t >= 0 and s["construct_s"] >= 0 and s["exec_s"] >= 0
         assert s["construct_jobs"] >= 0, (k, s)
+        assert s["codegen_compiles"] >= 0, (k, s)
         # split components must reassemble the combined time (rounding slop)
         assert abs((s["construct_s"] + s["exec_s"]) - t) < 0.05, (k, s, t)
         # exec_min_s is the floor-check statistic — min over ALL
