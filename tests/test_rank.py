@@ -400,7 +400,7 @@ def test_tie_refinement_exact_and_balanced_numeric_tiebreak(spark, monkeypatch):
         ).collect()
     }
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    tagged, by_bucket, total, _ = rank._tag_balanced(df, order, 8, [], "t")
+    tagged, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 8, [], "t")
     assert total == n
     assert _max_bucket(by_bucket) <= 4 * (n / 8), sorted(
         int(r["__cnt"]) for r in by_bucket.values()
@@ -439,7 +439,7 @@ def test_tie_refinement_string_tiebreaker_with_nulls(spark, monkeypatch, tie_asc
         ).collect()
     }
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    tagged, by_bucket, total, _ = rank._tag_balanced(df, order, 8, [], "t")
+    tagged, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 8, [], "t")
     assert total == n
     assert _max_bucket(by_bucket) <= 4 * (n / 8), sorted(
         int(r["__cnt"]) for r in by_bucket.values()
@@ -466,7 +466,7 @@ def test_tie_refinement_two_levels_deep(spark, monkeypatch):
         ).collect()
     }
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    tagged, by_bucket, total, _ = rank._tag_balanced(df, order, 6, [], "t")
+    tagged, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 6, [], "t")
     assert _max_bucket(by_bucket) <= 4 * (n / 6), sorted(
         int(r["__cnt"]) for r in by_bucket.values()
     )
@@ -649,7 +649,7 @@ def test_boolean_leading_key_and_timestamp_tiebreak_refinement(spark, monkeypatc
         ).collect()
     }
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    tagged, by_bucket, total, _ = rank._tag_balanced(df, order, 6, [], "t")
+    tagged, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 6, [], "t")
     assert total == n
     assert _max_bucket(by_bucket) <= 4 * (n / 6), sorted(
         int(r["__cnt"]) for r in by_bucket.values()
@@ -775,8 +775,8 @@ def test_lossy_projection_tie_buckets_are_not_refined(spark, monkeypatch):
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
     # and it actually refined: the 160-row NaN class must not sit in
     # one bucket (threshold 4 * 200/8 = 100 < 160 with the floor at 0)
-    tagged, by_bucket, _, _ = rank._tag_balanced(
-        df3, [("v", True), ("w", True), ("id", True)], 8, [], "t"
+    tagged, [(_, by_bucket)], _, _ = rank._tag_balanced(
+        df3, [[("v", True), ("w", True), ("id", True)]], 8, [], "t"
     )
     assert _max_bucket(by_bucket) < 160
 
@@ -810,7 +810,7 @@ def test_decimal_leading_key_tie_refinement_and_gate(spark, monkeypatch):
     order = [("v", True), ("w", True), ("id", True)]
     gr = rank.global_rank(df, order, num_buckets=8)
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    _, by_bucket, total, _ = rank._tag_balanced(df, order, 8, [], "t")
+    _, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 8, [], "t")
     assert total == n
     # the 240-row tie class refined: threshold 4 * 400/8 = 200 < 240
     assert _max_bucket(by_bucket) < 240, sorted(
@@ -837,7 +837,7 @@ def test_decimal_leading_key_tie_refinement_and_gate(spark, monkeypatch):
     }
     gr30 = rank.global_rank(df30, order, num_buckets=8)
     assert {r["id"]: r["rank"] for r in gr30.df.collect()} == expect30
-    _, by_bucket30, _, _ = rank._tag_balanced(df30, order, 8, [], "t")
+    _, [(_, by_bucket30)], _, _ = rank._tag_balanced(df30, [order], 8, [], "t")
     # gate blocked refinement: the 240-row tie class stays one bucket
     assert _max_bucket(by_bucket30) >= 240
 
@@ -899,7 +899,7 @@ def test_string_continuation_refines_long_shared_prefixes(spark, monkeypatch):
     }
     gr = rank.global_rank(df, order, num_buckets=8)
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    _, by_bucket, total, _ = rank._tag_balanced(df, order, 8, [], "t")
+    _, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 8, [], "t")
     assert total == n
     # 1600-row tie class, threshold 4 * 2000/8 = 1000: without
     # continuation the all-equal first window left it whole
@@ -935,7 +935,7 @@ def test_string_continuation_exhausts_then_next_column_refines(spark, monkeypatc
     }
     gr = rank.global_rank(df, order, num_buckets=8)
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    _, by_bucket, _, _ = rank._tag_balanced(df, order, 8, [], "t")
+    _, [(_, by_bucket)], _, _ = rank._tag_balanced(df, [order], 8, [], "t")
     # the 900-row identical-string class refined on w: threshold
     # 4 * 1200/8 = 600 < 900
     assert _max_bucket(by_bucket) <= 600, sorted(
@@ -972,7 +972,7 @@ def test_window_jump_reaches_divergent_byte_within_few_stages(spark, monkeypatch
     }
     gr = rank.global_rank(df, order, num_buckets=8)
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
-    _, by_bucket, _, _ = rank._tag_balanced(df, order, 8, [], "t")
+    _, [(_, by_bucket)], _, _ = rank._tag_balanced(df, [order], 8, [], "t")
     # 1200-row tie class, threshold 4 * 1500/8 = 750: balanced only
     # if the jump landed within the 3-stage budget
     assert _max_bucket(by_bucket) <= 750, sorted(
@@ -1095,7 +1095,7 @@ def test_dominant_value_in_window_refines_instead_of_advancing(spark, monkeypatc
     assert {r["id"]: r["rank"] for r in gr.df.collect()} == expect
     # the 'the' mode class (~1372 rows) must end up refined on id,
     # not parked in one oversized bucket by the bogus advance
-    _, by_bucket, total, _ = rank._tag_balanced(df, order, 8, [], "t")
+    _, [(_, by_bucket)], total, _ = rank._tag_balanced(df, [order], 8, [], "t")
     assert total == n
     assert _max_bucket(by_bucket) <= 4 * (n / 8), sorted(
         int(r["__cnt"]) for r in by_bucket.values()
@@ -1521,3 +1521,77 @@ def test_x65_construct_runs_no_refinement_stage(spark, monkeypatch):
         spark.conf.set(key, old)
     assert as_is >= 1
     assert capped == as_is
+
+
+def test_construct_jobs_pinned_per_primitive(spark):
+    """Construct-time Spark jobs per primitive on a fixed input with no
+    skew: one splits aggregate and one counts aggregate (two jobs each
+    under AQE: the shuffle map stage, then the result), shared across
+    every order of a ``multi_global_rank``.  A NULL-bearing numeric
+    leading key pays the discarded detection pass plus a sub-rank per
+    slice; a string leading key ranks its NULL slice and its
+    prefix-coded main slice with no detection pass.  The first call of
+    a sliced rank also materializes the slice cache (one more job)."""
+    import uuid
+
+    from big_data_fknn_spark.operators.rank import multi_global_rank
+
+    sc = spark.sparkContext
+    n = 5000
+    df = spark.range(n).select(
+        "id",
+        ((F.col("id") * 7919) % n).cast("double").alias("a"),
+        ((F.col("id") * 104729) % n).cast("double").alias("b"),
+        ((F.col("id") * 1299709) % n).cast("long").alias("c"),
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise((F.col("id") * 7919) % n)
+        .cast("double")
+        .alias("nv"),
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise(F.format_string("k%05d", (F.col("id") * 7919) % n))
+        .alias("s"),
+    )
+
+    def jobs(build):
+        group = f"rank-construct-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "rank construct")
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # executing the result first gives the status store time to
+        # record every construct job
+        out.write.format("noop").mode("overwrite").save()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    order = [("a", True), ("id", True)]
+    assert jobs(lambda: global_rank(df, order, num_buckets=4).df) == 4
+    assert (
+        jobs(
+            lambda: global_rank(
+                df, order, num_buckets=4, running_sum=("c", "cum")
+            ).df
+        )
+        == 4
+    )
+    assert (
+        jobs(lambda: global_running_agg(df, order, "c", "max", num_buckets=4))
+        == 4
+    )
+    specs = [
+        ("ra", order),
+        ("rb", [("b", False), ("id", True)]),
+        ("rc", [("c", True), ("id", True)]),
+    ]
+    assert jobs(lambda: multi_global_rank(df, specs, num_buckets=4)[0]) == 4
+    for lead, warm in (("nv", 12), ("s", 8)):
+        # each slice case caches its own projection
+        sliced = df.select("id", lead)
+
+        def build(sliced=sliced, lead=lead):
+            return global_rank(
+                sliced, [(lead, True), ("id", True)], num_buckets=4
+            ).df
+
+        first = jobs(build)
+        assert (first, jobs(build)) == (warm + 1, warm), lead
