@@ -35,13 +35,13 @@ internally for ``ORDER BY``):
 Every primitive runs steps 1-3 through ONE tagger,
 :func:`_tag_balanced`, over a LIST of orders: one splits job for
 every leading key, one counts job (a plain ``groupBy`` for one
-order, ``GROUPING SETS`` for several), then per order the NULL
-check, the injectivity gate and :func:`_refine_loop`.  Step 4 is
+order, ``GROUPING SETS`` for several), then per order the
+injectivity gate and :func:`_refine_loop`.  Step 4 is
 :func:`_ranked` (offsets + ``row_number`` window) for
 :func:`global_rank` and :func:`multi_global_rank`; running
 aggregates fold per-bucket values through
-:func:`_exclusive_prefix`.  NULL-bearing and string leading keys
-rank as two stitched slices (:func:`_rank_slices`).
+:func:`_exclusive_prefix`.  NULL-bearing and string leading keys go
+through the same pass (see "Caveats").
 
 Ties (the round-3 verdict's scale-killer): with strict-``<``
 bucketing alone, ALL rows tied on the leading key share one bucket —
@@ -93,20 +93,20 @@ value within the bucket ⊕ the literal prefix over earlier buckets.
 ``multi_global_rank`` amortizes the construct jobs across SEVERAL
 orders of one input (one splits aggregate + one GROUPING SETS count
 pass however many metrics), and the bucketing key is type-dispatched
-(numeric/decimal/timestamp/date/boolean; a string LEADING key goes
-through its prefix-code slice; anything else raises — float/double
-NaN is mapped to +∞ so buckets agree with Spark's NaN-greatest sort
-in BOTH directions).
+(numeric/decimal/timestamp/date/boolean; ``global_rank`` ranks a
+string LEADING key by its prefix code prepended as a numeric leading
+column; anything else raises — float/double NaN is mapped to +∞ so
+buckets agree with Spark's NaN-greatest sort in BOTH directions).
 
 Caveats: the order must be a TOTAL order (append a unique key —
-every caller here does, for cross-engine determinism anyway).  The
-bucketed leading key must be non-null — CHECKED inside the
-per-bucket counts job (zero extra passes): ``global_rank`` then
-ranks the NULL rows as their own slice in Spark's window placement,
-while ``global_running_agg`` and ``multi_global_rank`` raise instead
-of silently misplacing NULLs for descending orders.  NULLs in LATER
-order columns are fine (the sub-split projection maps them to ±∞
-matching Spark's NULLS FIRST asc / NULLS LAST desc defaults).
+every caller here does, for cross-engine determinism anyway).  NULLs
+in ANY order column, the leading key included, project to −∞
+ascending / +∞ descending, so they land in the first / last bucket
+exactly where Spark's NULLS FIRST (asc) / NULLS LAST (desc) window
+puts them, and the in-bucket sort on the true columns orders them
+within it.  A heavy NULL class is a duplicate ±∞ split, so it gets
+its own tie bucket; where NULLs share that bucket with real
+±Infinity doubles, :func:`_inj_evidence` keeps it from being refined.
 
 Cost: two extra passes over the (already aggregated, entity-
 cardinality) input at construct time, plus two more per refinement
@@ -120,13 +120,10 @@ from __future__ import annotations
 import math
 import operator
 from dataclasses import dataclass
-from functools import reduce
 from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..cache import cached
 
 __all__ = [
     "GlobalRank",
@@ -183,7 +180,6 @@ def _bucket_key(
     ascending: bool,
     *,
     allow_string: bool = False,
-    null_as_extreme: bool = False,
     soft: bool = False,
     str_offset: int = 1,
 ) -> Column | None:
@@ -201,10 +197,9 @@ def _bucket_key(
     ``allow_string`` enables the fixed-width binary-prefix code for
     string TIEBREAKERS (leading keys keep rejecting strings: a 6-byte
     prefix can collapse a pathological key set into one bucket, so
-    callers must opt in by projecting explicitly).  ``null_as_extreme``
-    maps NULL to ±∞ so the bucket order matches Spark's NULLS FIRST
-    (asc) / NULLS LAST (desc) defaults — used for tiebreakers, while
-    the leading key's non-null contract is enforced by the counts job.
+    callers must opt in by projecting explicitly).  NULL maps to ±∞
+    so the bucket order matches Spark's NULLS FIRST (asc) / NULLS LAST
+    (desc) defaults, for the leading key and tiebreakers alike.
     """
     from pyspark.sql import types as T
 
@@ -255,11 +250,7 @@ def _bucket_key(
             "monotone numeric first (e.g. a length, an epoch, a prefix code)"
         )
     key = key if ascending else -key
-    if null_as_extreme:
-        key = F.coalesce(
-            key, F.lit(float("-inf") if ascending else float("inf"))
-        )
-    return key
+    return F.coalesce(key, F.lit(float("-inf") if ascending else float("inf")))
 
 
 def _splits_agg(key: Column, n: int, alias: str) -> Column:
@@ -303,8 +294,7 @@ def _bucket_expr(splits: list[float], key: Column, tie_buckets: bool) -> Column:
     order-correct (all its rows are equal on the key).  Computed as
     ``2·#(<key) + array_contains`` — one lambda pass, not two (the
     second filter's py4j/codegen cost was measurable at bench).
-    NULL key (the pre-raise path for a NULL leading key) lands in
-    bucket 0 under both schemes.
+    The key is never NULL: :func:`_bucket_key` maps NULL to ±∞.
 
     Above ``_TWO_LEVEL_MIN`` splits the strictly-below count runs in
     two levels — chunk the sorted splits into ~√n chunks, count chunk
@@ -378,7 +368,7 @@ def _inj_evidence(df: DataFrame, col: Column, tag: str = ""):
     reading them.  NULL rows count as lossy only for float/double:
     every other projection maps NULL to ±∞ in a domain no gated real
     value reaches, but a real double -Infinity DOES reach the NULL
-    tiebreaker image (asc and desc both), so the double gate also
+    image (asc and desc both), so the double gate also
     fails when NULLs coexist with real infinities."""
     from pyspark.sql import types as T
 
@@ -400,8 +390,8 @@ def _inj_evidence(df: DataFrame, col: Column, tag: str = ""):
         ]
         # Two lossy collisions exist for float/double, both involving
         # a real ±∞ in the bucket: NaN's +∞ image, and NULL's ±∞
-        # tiebreaker image (``null_as_extreme`` maps NULL to -∞ asc /
-        # +∞ desc — exactly where a real -Infinity lands after the
+        # image (:func:`_bucket_key` maps NULL to -∞ asc / +∞ desc —
+        # exactly where a real -Infinity lands after the
         # sign handling, while every other type's NULL image sits
         # outside the reachable domain).  An all-NaN / all-inf /
         # all-NULL tie bucket is genuinely all-equal, so only the
@@ -492,7 +482,6 @@ def _refine_loop(
             col,
             next_asc,
             allow_string=True,
-            null_as_extreme=True,
             soft=True,
             str_offset=off,
         )
@@ -675,26 +664,22 @@ def _tag_balanced(
     orders: list[list[tuple[Column | str, bool]]],
     n: int,
     extra_aggs: list[Column],
-    err_prefix: str,
-    raise_on_null: bool = True,
-) -> tuple[DataFrame, list[tuple[str, dict]], int, int]:
+) -> tuple[DataFrame, list[tuple[str, dict]], int]:
     """Tag ``df`` with one balanced bucket column per order — the one
     tagging path of every primitive here: ONE splits job over every
-    leading key, ONE counts job, then per order the NULL check, the
-    leading-key injectivity gate and skew refinement when needed.
-    Returns ``(tagged, [(bucket column, per-bucket agg Rows keyed by
-    bucket id) per order], total rows, NULL leading-key rows)``.
+    leading key, ONE counts job, then per order the leading-key
+    injectivity gate and skew refinement when needed.  Returns
+    ``(tagged, [(bucket column, per-bucket agg Rows keyed by bucket
+    id) per order], total rows)``.
 
     A single order buckets into ``_BUCKET`` and counts with a plain
     ``groupBy``; several orders bucket into ``_BUCKET_<i>`` and count
     in one GROUPING SETS aggregate (single scan + Expand;
     ``grouping_id`` tells the sets apart).  The counts job piggybacks
-    the NULL-leading-key contract check, the injectivity evidence and
-    any caller aggregates (e.g. per-bucket sums) at zero extra
-    passes; a refined order recounts its caller aggregates.  With
-    ``raise_on_null=False`` a NULL leading key returns the unrefined
-    tagging and the NULL count instead of raising (global_rank ranks
-    slices and discards the tagging)."""
+    the injectivity evidence and any caller aggregates (e.g.
+    per-bucket sums) at zero extra passes; a refined order recounts
+    its caller aggregates.  NULL leading keys need no check: they
+    bucket at ±∞ like every other NULL order value."""
     tags = [""] if len(orders) == 1 else [f"_{i}" for i in range(len(orders))]
     bcols = [_BUCKET + t for t in tags]
     leads = [_resolve(order[0][0]) for order in orders]
@@ -713,17 +698,7 @@ def _tag_balanced(
         tagged = tagged.withColumn(c, _bucket_expr(sp, k, tie))
     inj = [_inj_evidence(df, lead, t) for lead, t in zip(leads, tags)]
     cnt = F.count(F.lit(1)).alias("__cnt")
-    aggs = [
-        cnt,
-        # the non-null contract checked for free inside the counts job:
-        # a NULL leading key would silently land in bucket 0 — correct
-        # only for ASC NULLS FIRST, wrong for DESC — so fail loudly
-        F.sum(
-            reduce(operator.add, [lead.isNull().cast("long") for lead in leads])
-        ).alias("__nulls"),
-        *[a for inj_aggs, _ in inj for a in inj_aggs],
-        *extra_aggs,
-    ]
+    aggs = [cnt, *[a for inj_aggs, _ in inj for a in inj_aggs], *extra_aggs]
     # job 2: per-(order, bucket) counts
     if len(orders) == 1:
         rows = tagged.groupBy(bcols[0]).agg(*aggs).collect()
@@ -742,16 +717,6 @@ def _tag_balanced(
     def counts(i: int) -> dict[int, int]:
         return {b: int(r["__cnt"]) for b, r in per[i].items()}
 
-    # order 0's buckets cover every row exactly once
-    n_null = sum(int(r["__nulls"] or 0) for r in per[0].values())
-    if n_null:
-        if not raise_on_null:
-            return tagged, list(zip(bcols, per)), sum(counts(0).values()), n_null
-        raise ValueError(
-            f"{err_prefix}: leading order key has {n_null} NULL row(s) — "
-            "range bucketing requires a non-null leading key (filter or "
-            "coalesce first)"
-        )
     for i, (c, order, (sp, tie), (_, gate)) in enumerate(
         zip(bcols, orders, schemes, inj)
     ):
@@ -768,7 +733,8 @@ def _tag_balanced(
             return counts(i)
 
         tagged = _refine_loop(tagged, c, order, n, counts(i), tie_ids, recount)
-    return tagged, list(zip(bcols, per)), sum(counts(0).values()), 0
+    # order 0's buckets cover every row exactly once
+    return tagged, list(zip(bcols, per)), sum(counts(0).values())
 
 
 def _window(bcol: str, order: list[tuple[Column | str, bool]]) -> Window:
@@ -822,84 +788,6 @@ class GlobalRank:
     running_total: object = None  # grand total of ``running_sum``, if requested
 
 
-def _rank_slices(
-    df: DataFrame,
-    order: list[tuple[Column | str, bool]],
-    kw: dict,
-    *,
-    string_lead: bool,
-) -> GlobalRank:
-    """Spark window semantics for a leading key the bucketing cannot
-    take whole — one with NULL rows, or a STRING — as two sub-ranks
-    stitched with a driver-literal offset.
-
-    The NULL slice (all equal on the leading key) ranks by the
-    ORIGINAL order's remaining columns and takes Spark's placement:
-    FIRST ascending, LAST descending.  The non-NULL slice ranks by the
-    full order; for a string leading key it first prepends the
-    monotone 6-byte binary-prefix code (_bucket_key's string
-    projection) as a derived numeric leading column: ordering by
-    (code, s, …) equals ordering by (s, …) since the code is monotone
-    in s, the code is never NULL for a non-null string, and a
-    prefix-tied code bucket sub-splits on s itself through the
-    string-continuation refinement.  Running sums compose the same
-    way: the second slice adds the first slice's grand total.
-
-    A NULL-bearing numeric key is detected for free in the counts job,
-    but that detection already ran (and discarded) one splits job +
-    one counts job on the full input; string keys dispatch here before
-    any job.  The input is ``cached()`` before the complementary
-    filters: both slices then read one materialization (no second
-    full scan per slice, and a non-deterministic upstream expression
-    cannot make the slices overlap or miss rows)."""
-    (lead_c, lead_asc), tail = order[0], order[1:]
-    lead = _resolve(lead_c)
-    df = cached(df)
-    if not tail:
-        raise ValueError(
-            "global_rank: a NULL-bearing or string leading order key needs "
-            "a further order column — a total order needs a tiebreaker"
-        )
-    gr_null = global_rank(df.where(lead.isNull()), tail, **kw)
-    main = df.where(lead.isNotNull())
-    if string_lead:
-        code = "__gr_strlead_code"
-        main = main.withColumn(
-            code, _bucket_key(main, lead, lead_asc, allow_string=True)
-        )
-        gr = global_rank(main, [(code, True), *order], **kw)
-        gr_main = GlobalRank(gr.df.drop(code), gr.total, gr.running_total)
-    else:
-        gr_main = global_rank(main, order, **kw)
-    first, second = (gr_null, gr_main) if lead_asc else (gr_main, gr_null)
-    # the second slice's ranks shift by the first's driver-known total,
-    # and its inclusive running sum adds the first's grand total
-    rank_col, running_sum, sum_type = kw["rank_col"], kw["running_sum"], kw["sum_type"]
-    sdf = second.df
-    if first.total:
-        sdf = sdf.withColumn(
-            rank_col, F.col(rank_col) + F.lit(first.total).cast("long")
-        )
-    running_total = None
-    if running_sum is not None:
-        out_name = running_sum[1]
-        ft, st = first.running_total, second.running_total
-        if ft is not None:
-            pre = F.lit(ft).cast(sum_type) if sum_type else F.lit(ft)
-            sdf = sdf.withColumn(
-                out_name,
-                F.when(F.col(out_name).isNull(), pre).otherwise(
-                    F.col(out_name) + pre
-                ),
-            )
-        running_total = (
-            st if ft is None else (ft if st is None else ft + st)
-        )
-    return GlobalRank(
-        first.df.unionByName(sdf), first.total + second.total, running_total
-    )
-
-
 def global_rank(
     df: DataFrame,
     order: list[tuple[Column | str, bool]],
@@ -917,14 +805,14 @@ def global_rank(
     plus the driver-known total row count, which lets
     ntile/percent_rank be pure literal arithmetic on the rank.
 
-    Since round 6 the leading key may be NULL-bearing (the NULL slice
-    ranks by the remaining order columns and takes Spark's window
-    placement — FIRST ascending, LAST descending; detected for free
-    in the counts job, the split costs two sub-ranks only when NULLs
-    exist) and may be a STRING (bucketed via the monotone 6-byte
-    prefix code; prefix-tied buckets sub-split on the string itself
-    through the continuation refinement).  Unprojectable types
-    (array/struct) still fail loudly.
+    The leading key may be NULL-bearing: NULL rows bucket at ±∞ and
+    take Spark's window placement — FIRST ascending, LAST descending —
+    in the same single pass.  It may also be a STRING: the monotone
+    6-byte prefix code (:func:`_bucket_key`'s string projection) is
+    prepended as a numeric leading column, since ordering by (code,
+    s, …) equals ordering by (s, …), and prefix-tied code buckets
+    sub-split on the string itself through the continuation
+    refinement.  Unprojectable types (array/struct) still fail loudly.
 
     ``running_sum=(value_col, out_name)`` additionally emits the
     INCLUSIVE running sum of ``value_col`` in rank order — same
@@ -959,24 +847,25 @@ def global_rank(
     """
     from pyspark.sql import types as T
 
-    kw = dict(
-        rank_col=rank_col,
-        num_buckets=num_buckets,
-        running_sum=running_sum,
-        sum_type=sum_type,
-    )
-    if isinstance(_dtype(df, _resolve(order[0][0])), T.StringType):
-        return _rank_slices(df, order, kw, string_lead=True)
+    lead, lead_asc = _resolve(order[0][0]), order[0][1]
+    if isinstance(_dtype(df, lead), T.StringType):
+        code = "__gr_strlead_code"
+        df = df.withColumn(code, _bucket_key(df, lead, lead_asc, allow_string=True))
+        gr = global_rank(
+            df,
+            [(code, True), *order],
+            rank_col=rank_col,
+            num_buckets=num_buckets,
+            running_sum=running_sum,
+            sum_type=sum_type,
+        )
+        return GlobalRank(gr.df.drop(code), gr.total, gr.running_total)
     n = _num_buckets(df, num_buckets)
     sum_val = _resolve(running_sum[0]) if running_sum else None
     if sum_val is not None and sum_type:
         sum_val = sum_val.cast(sum_type)
     extra = [F.sum(sum_val).alias("__sum")] if sum_val is not None else []
-    tagged, [(_, by_bucket)], total, n_null = _tag_balanced(
-        df, [order], n, extra, "global_rank", raise_on_null=False
-    )
-    if n_null:
-        return _rank_slices(df, order, kw, string_lead=False)
+    tagged, [(_, by_bucket)], total = _tag_balanced(df, [order], n, extra)
     out, w = _ranked(tagged, _BUCKET, order, by_bucket, rank_col)
     running_total = None
     if sum_val is not None:
@@ -1043,8 +932,8 @@ def global_running_agg(
     val = _resolve(value)
     if agg == "sum" and sum_type:
         val = val.cast(sum_type)
-    tagged, [(_, by_bucket)], _, _ = _tag_balanced(
-        df, [order], n, [agg_fn(val).alias("__v")], "global running agg"
+    tagged, [(_, by_bucket)], _ = _tag_balanced(
+        df, [order], n, [agg_fn(val).alias("__v")]
     )
     pre, _ = _exclusive_prefix(by_bucket, "__v", fold)
     frame_end = -1 if exclusive else 0
@@ -1085,16 +974,15 @@ def multi_global_rank(
     SAME DataFrame, so callers need no join-back to combine the rank
     columns.  Tie-skew is checked per metric from the shared counts;
     only a metric that IS skewed pays its own refinement jobs (see
-    module docstring).  A NULL leading key raises.  ``num_buckets``
+    module docstring).  NULL leading keys rank like Spark's window, as
+    in :func:`global_rank`.  ``num_buckets``
     and the self-tuned percentile accuracy behave exactly as
     documented on :func:`global_rank` (shared across all specs).
 
     Returns ``(df + one rank column per spec, total_rows)``.
     """
     n = _num_buckets(df, num_buckets)
-    out, buckets, total, _ = _tag_balanced(
-        df, [order for _, order in specs], n, [], "multi_global_rank"
-    )
+    out, buckets, total = _tag_balanced(df, [order for _, order in specs], n, [])
     for (name, order), (bcol, rows) in zip(specs, buckets):
         out, _ = _ranked(out, bcol, order, rows, name)
     return out.drop(*[bcol for bcol, _ in buckets]), total

@@ -392,7 +392,7 @@ def test_global_rank_500k_balanced_and_exact(spark):
     from big_data_fknn_spark.operators.rank import _tag_balanced
 
     order = [("v", True), ("id", True)]
-    _, [(_, by_bucket)], _, _ = _tag_balanced(df, [order], 32, [], "t")
+    _, [(_, by_bucket)], _ = _tag_balanced(df, [order], 32, [])
     sizes = [int(r["__cnt"]) for r in by_bucket.values()]
     assert max(sizes) <= 4 * (n / 32), f"bucket skew: {sorted(sizes)[-3:]}"
 
@@ -449,7 +449,7 @@ def test_global_rank_500k_tied_leading_key_balanced_and_exact(spark):
 
     # (b) final bucket balance at real thresholds: the 250k tie class
     # must have been sub-split on the token prefix code
-    _tagged, [(_, by_bucket)], total, _ = _tag_balanced(df, [order], 32, [], "stress")
+    _tagged, [(_, by_bucket)], total = _tag_balanced(df, [order], 32, [])
     assert total == n
     sizes = sorted(int(r["__cnt"]) for r in by_bucket.values())
     assert sizes[-1] <= 4 * (n / 32), f"tie-bucket skew survived: {sizes[-3:]}"
@@ -609,7 +609,7 @@ def test_global_rank_500k_long_shared_prefix_continuation(spark):
     joined = gr.df.where(F.col("id") % 500 == 0).join(ref, "id")
     assert joined.where(F.col("r") != F.col("rn")).count() == 0
 
-    _tagged, [(_, by_bucket)], total, _ = _tag_balanced(df, [order], 32, [], "cont")
+    _tagged, [(_, by_bucket)], total = _tag_balanced(df, [order], 32, [])
     assert total == n
     sizes = sorted(int(r["__cnt"]) for r in by_bucket.values())
     assert sizes[-1] <= 4 * (n / 32), f"prefix tie class survived: {sizes[-3:]}"
