@@ -79,6 +79,34 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFra
     return w.select("doc_id", shingles(F.col("w"), n).alias("sh"))
 
 
+def _shingle_tokens(sh: DataFrame) -> DataFrame:
+    """(doc_id, n, s): one row per shingle, each carrying its doc's
+    shingle count ``n``.  Shingle arrays are distinct (functions/text.py
+    ``shingles``), so ``size(sh)`` IS the per-doc row count — the
+    Jaccard denominator rides the shingle join instead of a per-doc
+    size table joined back onto every pair."""
+    return sh.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
+
+
+def _exact_jaccard(tok: DataFrame, cand: DataFrame | None = None) -> DataFrame:
+    """Exact shingle Jaccard ``(doc_i, doc_j, jac)``, inverted-index
+    style: |A∩B| = shared-shingle count per pair, |A∪B| = n_i + n_j −
+    |A∩B|, with both sizes carried through the join from
+    :func:`_shingle_tokens` rows.  Without ``cand`` every doc_i < doc_j
+    pair sharing ≥ 1 shingle is scored (work ~ Σ_shingle df²); with
+    ``cand`` (doc_i < doc_j candidate pairs) only those are verified."""
+    ti = tok.select(F.col("doc_id").alias("doc_i"), F.col("n").alias("n_i"), "s")
+    tj = tok.select(F.col("doc_id").alias("doc_j"), F.col("n").alias("n_j"), "s")
+    if cand is None:
+        pairs = ti.join(tj, "s").where(F.col("doc_i") < F.col("doc_j"))
+    else:
+        pairs = cand.join(ti, "doc_i").join(tj, ["doc_j", "s"])
+    inter = F.count(F.lit(1))
+    return pairs.groupBy("doc_i", "doc_j", "n_i", "n_j").agg(
+        (inter / (F.col("n_i") + F.col("n_j") - inter)).alias("jac")
+    )
+
+
 # ------------------------------------------------------------- J7. exact
 
 
@@ -170,11 +198,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str):
     cached — the signature table is scanned twice by the self-join
     (at 100 TB it is a materialized table, written once, joined
     against itself)."""
-    tok = (
-        _docs_with_shingles(spark, sf_dir)
-        .select("doc_id", F.explode("sh").alias("s"))
-    )
-    tok = cached(tok)
+    tok = cached(_shingle_tokens(_docs_with_shingles(spark, sf_dir)))
     # banding path only: drop stop-shingles (df > _LSH_MAXDF) so every
     # band bucket is bounded by a constant — see _LSH_MAXDF.  The
     # returned tok keeps the FULL shingle sets for exact verification.
@@ -252,30 +276,15 @@ def j8_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     band bucket by a constant (see _LSH_MAXDF; pinned by the
     popular-shingle stress in tests/test_scale_stress.py).  Shingle ARRAYS never move:
     the exploded (doc, shingle) table is cached once and both the
-    minhash signatures and the exact verify (inverted-index
-    intersection count over candidate pairs only) derive from it.
+    minhash signatures and the exact verify (:func:`_exact_jaccard`:
+    inverted-index intersection count over candidate pairs only, each
+    shingle row carrying its doc's shingle count) derive from it.
     This finds the corpus's 25 planted near-dup pairs (jac ≥ .8)
     with P(miss) ≈ 1e-4, and the oracle replicates the identical
     pipeline, so parity holds regardless."""
     tok, cand = _lsh_candidates(spark, sf_dir)
-    # exact verify, inverted-index style: |A∩B| = shared-shingle count
-    # over candidate pairs; |A∪B| = |A| + |B| − |A∩B|
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ti = tok.select(F.col("doc_id").alias("doc_i"), "s")
-    tj = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
-        cand.join(ti, "doc_i")
-        .join(tj, ["doc_j", "s"])
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    sj = sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    jac = F.col("inter") / (F.col("n_i") + F.col("n_j") - F.col("inter"))
     return (
-        inter.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .withColumn("jac", jac)
+        _exact_jaccard(tok, cand)
         .where(F.col("jac") >= _TAU)
         .select("doc_i", "doc_j", F.round("jac", 6).alias("jaccard"))
     )
@@ -301,7 +310,9 @@ def j8b_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard ≥ 0.5 pairs — the ground truth j8's LSH
     approximates — via the inverted-index formulation: explode
     (doc, shingle), equi-join on the shingle, count shared shingles
-    per pair, then jac = |∩| / (|A| + |B| − |∩|).
+    per pair, then jac = |∩| / (|A| + |B| − |∩|) — every shingle row
+    carries its doc's shingle count, so |A| and |B| ride the one join
+    (:func:`_exact_jaccard`) and no size table is joined back.
 
     A qualifying pair shares ≥ 1 shingle, so this is EXACTLY the
     naive all-pairs result, but work scales with Σ_shingle df²
@@ -317,24 +328,9 @@ def j8b_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prefix filtering: index each doc's rarest shingles only, bound
     |∩| for the rest) trades this simplicity for it.  The join
     shuffles on the shingle hash, so it shards cleanly either way."""
-    sh = cached(_docs_with_shingles(spark, sf_dir))
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    tok = sh.select("doc_id", F.explode("sh").alias("s"))
-    a = tok.select(F.col("doc_id").alias("doc_i"), "s")
-    b = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
-        a.join(b, ["s"])
-        .where(F.col("doc_i") < F.col("doc_j"))
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    sj = sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    jac = F.col("inter") / (F.col("n_i") + F.col("n_j") - F.col("inter"))
+    tok = _shingle_tokens(cached(_docs_with_shingles(spark, sf_dir)))
     return (
-        inter.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .withColumn("jac", jac)
+        _exact_jaccard(tok)
         .where(F.col("jac") >= _TAU)
         .select("doc_i", "doc_j", F.round("jac", 6).alias("jaccard"))
     )
@@ -1515,38 +1511,21 @@ def j8f_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs into components and label each doc with its component's min
     doc_id (the canonical survivor).
 
-    Edges are the exact 3-gram-Jaccard >= tau pairs (same inverted
-    index as j8b_ngram_jaccard).  Components come from Pregel-style
-    min-label propagation expressed purely as DataFrame joins: each
-    round every node's label becomes min(own, neighbors'); converges
-    in O(component diameter) rounds.  Each round is one shuffle on
-    the node id; `localCheckpoint` truncates the lineage so plans
-    stay flat.  At 100 TB near-dup components are tiny and shallow
+    Edges are the exact 3-gram-Jaccard >= tau pairs (the same
+    :func:`_exact_jaccard` inverted index as j8b_ngram_jaccard), built
+    once: connected_components symmetrizes them in one scan.
+    Components come from Pregel-style min-label propagation expressed
+    purely as DataFrame joins: each round every node's label becomes
+    min(own, neighbors'); converges in O(component diameter) rounds.
+    Each round is one shuffle on the node id; `localCheckpoint`
+    truncates the lineage so plans stay flat.  At 100 TB near-dup components are tiny and shallow
     (dup clusters, not a social graph), so 3-5 rounds suffice; the
     convergence count() is an O(|V|) agg, not a collect.
 
     Oracle: DuckDB recursive CTE propagating labels to a fixpoint.
     """
-    sh = cached(_docs_with_shingles(spark, sf_dir))
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    tok = sh.select("doc_id", F.explode("sh").alias("s"))
-    a = tok.select(F.col("doc_id").alias("doc_i"), "s")
-    b = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
-        a.join(b, ["s"])
-        .where(F.col("doc_i") < F.col("doc_j"))
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    sj = sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    jac = F.col("inter") / (F.col("n_i") + F.col("n_j") - F.col("inter"))
-    pairs = (
-        inter.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .where(jac >= _TAU)
-        .select("doc_i", "doc_j")
-    )
+    tok = _shingle_tokens(cached(_docs_with_shingles(spark, sf_dir)))
+    pairs = _exact_jaccard(tok).where(F.col("jac") >= _TAU).select("doc_i", "doc_j")
     comp = connected_components(pairs, src="doc_i", dst="doc_j")
 
     w = Window.partitionBy("cluster_id")
@@ -3250,28 +3229,22 @@ def j50_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same inverted-index shape as j8b — explode (doc, shingle),
     equi-join on the shingle, count per ordered pair — so work is
-    Σ_shingle df², never |docs|²; the per-doc size table re-joins
-    unhinted (one row per document = corpus cardinality; AQE
-    broadcasts it only when actually small).
+    Σ_shingle df², never |docs|²; |A| rides the join (each shingle
+    row of the A side carries its doc's shingle count), so no per-doc
+    size table — corpus cardinality — is joined back.
     The ratio is int/int, one identical double per engine.
 
     Scale: at 100 TB the shingle join keys would be hashed to int64
     first (j8b note) and stop-shingle df-capping bounds the worst
     collision mass; both apply unchanged here."""
-    sh = _docs_with_shingles(spark, sf_dir)
-    tok = sh.select("doc_id", F.explode("sh").alias("s"))
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = tok.select(F.col("doc_id").alias("doc_i"), "s")
+    tok = _shingle_tokens(_docs_with_shingles(spark, sf_dir))
+    a = tok.select(F.col("doc_id").alias("doc_i"), F.col("n").alias("n_i"), "s")
     b = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
+    return (
         a.join(b, "s")
         .where(F.col("doc_i") != F.col("doc_j"))
-        .groupBy("doc_i", "doc_j")
+        .groupBy("doc_i", "doc_j", "n_i")
         .agg(F.count(F.lit(1)).alias("i"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n").alias("n_i"))
-    return (
-        inter.join(si, "doc_i")
         .withColumn("cont", F.col("i").cast("double") / F.col("n_i"))
         .where(F.col("cont") >= _CONT_TAU)
         .select("doc_i", "doc_j", F.round("cont", 6).alias("containment"))
@@ -3317,7 +3290,7 @@ FROM m
 def j51_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured sketch quality, not the textbook formula: recall and
     candidate-precision of j8's 12-band MinHash-LSH against the
-    EXACT ≥0.5-Jaccard ground truth (j8b's inverted index) — the
+    EXACT ≥0.5-Jaccard ground truth (j8b's :func:`_exact_jaccard`) — the
     "measure, don't guess" companion every production dedup pipeline
     ships next to its LSH parameters.  recall = caught/truth (loss
     from banding), precision_cand = true pairs among candidates (how
@@ -3328,25 +3301,7 @@ def j51_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     this on a SAMPLE shard in production to validate band/row
     settings before the fleet run, which is exactly the shape here."""
     tok, cand = _lsh_candidates(spark, sf_dir)
-    sh = _docs_with_shingles(spark, sf_dir)
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = tok.select(F.col("doc_id").alias("doc_i"), "s")
-    b = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
-        a.join(b, "s")
-        .where(F.col("doc_i") < F.col("doc_j"))
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    sj = sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    jac = F.col("inter") / (F.col("n_i") + F.col("n_j") - F.col("inter"))
-    truth = (
-        inter.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .where(jac >= _TAU)
-        .select("doc_i", "doc_j")
-    )
+    truth = _exact_jaccard(tok).where(F.col("jac") >= _TAU).select("doc_i", "doc_j")
     t1 = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     c1 = cand.agg(F.count(F.lit(1)).alias("n_cand"))
     g1 = truth.join(cand, ["doc_i", "doc_j"]).agg(
@@ -3475,7 +3430,7 @@ def j53_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard, so the sketch's error is measurable row by row (j51
     gives the aggregate view; this gives the scatter).  matches is
     an int, est_jac an int/24 ratio — no float hazards; exact_jac is
-    the same inverted-index verify j8 runs.
+    the same candidate-pair :func:`_exact_jaccard` verify j8 runs.
 
     Scale: signatures are 24 strings/doc — the candidate join
     touches signatures and shingle sets only for colliding pairs;
@@ -3516,22 +3471,8 @@ def j53_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ti = tok.select(F.col("doc_id").alias("doc_i"), "s")
-    tj = tok.select(F.col("doc_id").alias("doc_j"), "s")
-    inter = (
-        cand.join(ti, "doc_i")
-        .join(tj, ["doc_j", "s"])
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    si = sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    sj = sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    jac = F.col("inter") / (F.col("n_i") + F.col("n_j") - F.col("inter"))
-    exact = (
-        inter.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .select("doc_i", "doc_j", F.round(jac, 6).alias("exact_jac"))
+    exact = _exact_jaccard(tok, cand).select(
+        "doc_i", "doc_j", F.round("jac", 6).alias("exact_jac")
     )
     return (
         cand.join(sa, "doc_i")

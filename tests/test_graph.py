@@ -121,9 +121,41 @@ def test_non_integral_and_null_node_ids_rejected(spark):
     d = spark.createDataFrame([(1.25, 2.5)], "src: double, dst: double")
     with pytest.raises(TypeError, match="integral node ids"):
         graph.connected_components(d)
-    nl = spark.createDataFrame([(1, 2), (3, None)], "src: bigint, dst: bigint")
-    with pytest.raises(ValueError, match="non-null"):
-        graph.connected_components(nl)
+    # a NULL endpoint on either side (mixed widths included) is a NULL
+    # node in one direction of the symmetrized edges
+    for edges, schema in (
+        ([(1, 2), (3, None)], "src: bigint, dst: bigint"),
+        ([(None, 4), (4, 5)], "src: int, dst: bigint"),
+    ):
+        nl = spark.createDataFrame(edges, schema)
+        with pytest.raises(ValueError, match="non-null"):
+            graph.connected_components(nl)
+
+
+def test_mixed_width_endpoints_widen_to_long(spark):
+    """One scan symmetrizes (src, dst) and (dst, src) into one array of
+    structs: an int and a long endpoint column must widen to a common
+    long, as a union of the two directions would, in either order."""
+    for schema in ("src: int, dst: bigint", "src: bigint, dst: int"):
+        df = spark.createDataFrame([(1, 2), (2, 3), (7, 6)], schema)
+        out = connected_components(df)
+        assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}, schema
+
+
+def test_self_loop_and_repeated_edges_label_each_node_once(spark):
+    """A self-loop, a duplicate edge and an edge repeated in reverse all
+    symmetrize into repeated messages; every node still gets exactly one
+    row."""
+    df = spark.createDataFrame(
+        [(5, 5), (1, 2), (1, 2), (2, 1), (3, 2), (9, 9), (9, 8)],
+        "src: bigint, dst: bigint",
+    )
+    rows = connected_components(df).collect()
+    assert len(rows) == len({r["node"] for r in rows})
+    got = {r["node"]: r["component"] for r in rows}
+    assert got == {5: 5, 1: 1, 2: 1, 3: 1, 8: 8, 9: 8}
 
 
 def test_empty_edge_set_returns_no_labels(spark):

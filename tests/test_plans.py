@@ -117,6 +117,69 @@ def test_minhash_join_is_equi_not_cross(spark):
     ), "LSH candidates must come from an equi-join on (band, key)"
 
 
+def test_j8b_scores_pairs_in_one_join(spark):
+    """The exact-Jaccard pairs come from the shingle self-join alone:
+    both shingle counts ride that join, so no per-doc size table is
+    joined back onto the pairs (which took two more joins)."""
+    import re
+
+    p = executed_plan(q(spark, "j8b_ngram_jaccard"))
+    joins = re.findall(r"\b(?:\w+Join|CartesianProduct)\b", p)
+    assert len(joins) == 1, joins
+
+
+def _seq(scala_seq) -> list:
+    out, it = [], scala_seq.iterator()
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def test_j8f_builds_its_edge_set_once(spark):
+    """j8f's construct (the near-dup edge set, checkpointed
+    symmetrized, then the connected-components rounds) in a cache-free
+    session: the one execution that reads the corpus — the ``sym``
+    checkpoint — holds ONE copy of the pairs pipeline (no ``Union``),
+    and the whole construct runs at most 13 Spark jobs.  Symmetrizing
+    with a union of two selects planned the pairs pipeline twice,
+    each copy re-joining a per-doc size table for both pair sides: 24
+    jobs."""
+    import uuid
+
+    from big_data_fknn_spark.cache import release_query_caches
+
+    release_query_caches()
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = {ex.executionId() for ex in _seq(store.executionsList())}
+    group = f"j8f-construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "j8f construct")
+    try:
+        df = q(spark, "j8f_dedup_clusters")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        # executing the result first gives the status stores time to
+        # record every construct job and execution
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        release_query_caches()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    corpus_reads = []
+    for ex in _seq(store.executionsList()):
+        if ex.executionId() in seen:
+            continue
+        if not jobs & {int(j) for j in _seq(ex.jobs().keys())}:
+            continue
+        names = [n.name() for n in _seq(store.planGraph(ex.executionId()).allNodes())]
+        if any(n.startswith("Scan parquet") for n in names):
+            corpus_reads.append(names)
+    assert len(corpus_reads) == 1, len(corpus_reads)
+    assert "Union" not in corpus_reads[0], sorted(set(corpus_reads[0]))
+    assert len(jobs) <= 13, len(jobs)
+
+
 def test_ivf_search_joins_on_cluster_id(spark):
     p = executed_plan(q(spark, "j9b_sim_search_ivf"))
     assert p.count("BroadcastNestedLoopJoin") <= 1, (
@@ -592,13 +655,15 @@ _HEADLINE_SHUFFLE_BOUNDS = {
     "i1_tumbling": 1,
     "j1_knn_crisp": 1,        # BLAS kernel: broadcast + one agg
     "j3_fknn_stage2": 8,
-    "j8_dedup_near": 15,      # minhash bands + verify joins; +4 in
-    # round 6 for the stop-shingle DF cap (count-by-shingle agg +
+    "j8_dedup_near": 11,      # minhash bands + verify joins, with 4
+    # exchanges for the stop-shingle DF cap (count-by-shingle agg +
     # static SMJ anti-join + re-shuffle to doc_id) — a deliberate
     # linear pass that bounds every band bucket by a constant; at
     # runtime AQE converts the anti-join to broadcast when the
     # frequent set is small, collapsing most of the extra exchanges
-    # (measured: sf0.1 exec 0.4-0.5 s, within noise of pre-cap)
+    # (measured: sf0.1 exec 0.4-0.5 s, within noise of pre-cap).
+    # Was 15 while the verify re-joined a per-doc size table for each
+    # pair side; the sizes now ride the shingle join (_exact_jaccard)
     "j9_sim_search": 1,
     "j9b_sim_search_ivf": 3,  # cluster assign + equi-join + topk
     "j10_text_tfidf": 5,      # +1 in r12: the corpus count moved from

@@ -8,11 +8,12 @@ committed ``plans/r12/<key>_{before,after}.txt`` files.  Usage:
     python tools/plan_capture.py before --headline        # bench.py set
 
 Each file holds the formatted physical plan (initial AQE plan) plus a
-one-line summary of exchange / join / python-eval node counts so a
-diff between before and after is self-describing.  Construct-time
-driver actions (the kNN kernel's chunk fetch, connected-components
-rounds) run as usual while the plan is built — the capture reflects
-the FINAL DataFrame each query returns.
+one-line summary of exchange / join / aggregate / window / python-eval
+node counts (:func:`node_counts`) so a diff between before and after
+is self-describing.  Construct-time driver actions (the kNN kernel's
+chunk fetch, connected-components rounds) run as usual while the plan
+is built — the capture reflects the FINAL DataFrame each query
+returns.
 """
 
 from __future__ import annotations
@@ -43,22 +44,56 @@ HEADLINE = (
 )
 
 _COUNTED = (
-    "Exchange hashpartitioning",
-    "Exchange rangepartitioning",
-    "Exchange SinglePartition",
+    "Exchange",
     "BroadcastExchange",
+    "ReusedExchange",
     "SortMergeJoin",
     "ShuffledHashJoin",
     "BroadcastHashJoin",
     "BroadcastNestedLoopJoin",
+    "CartesianProduct",
     "HashAggregate",
     "ObjectHashAggregate",
     "SortAggregate",
+    "Window",
     "WindowGroupLimit",
+    "Union",
+    "Expand",
+    "Generate",
+    "InMemoryTableScan",
     "MapInPandas",
     "ArrowEvalPython",
     "BatchEvalPython",
 )
+
+# a tree line: branch marks, an optional codegen star, the operator
+# name (first word), its arguments, then the node id
+_TREE_NODE = re.compile(r"^[\s:|+*-]*([A-Za-z]\w*)[^()]*\((\d+)\)\s*$")
+
+
+def node_counts(plan: str) -> dict[str, int]:
+    """Operator counts of an ``explain("formatted")`` render, one per
+    node id, read from the tree sections only (the main tree and each
+    subquery's tree).  The numbered detail section repeats every node
+    name, and a cached relation's subtree is printed once per scan of
+    it under the same ids, so neither adds to a count.  Shuffle
+    exchanges print as ``Exchange (n)`` with their partitioning only in
+    the details, so hash, range and single-partition exchanges all
+    count as ``Exchange``."""
+    names: dict[str, str] = {}
+    in_tree = False
+    for line in plan.splitlines():
+        if line.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree = True
+        elif not line.strip():
+            in_tree = False
+        elif in_tree and (m := _TREE_NODE.match(line)):
+            names[m.group(2)] = m.group(1)
+    counts = dict.fromkeys(_COUNTED, 0)
+    for name in names.values():
+        if name in counts:
+            counts[name] += 1
+    return counts
 
 
 def formatted_plan(df) -> str:
@@ -102,7 +137,7 @@ def main() -> None:
     for key in keys:
         df = reg[key].fn(spark, sf_dir)
         plan = formatted_plan(df)
-        counts = {p: len(re.findall(re.escape(p), plan)) for p in _COUNTED}
+        counts = node_counts(plan)
         summary = ", ".join(f"{p}={n}" for p, n in counts.items() if n)
         path = os.path.join(out_dir, f"{key}_{phase}.txt")
         with open(path, "w") as f:
